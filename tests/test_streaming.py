@@ -129,6 +129,26 @@ def test_stream_xml_extraction(spark, tmp_path):
     assert [r["id"] for r in rows] == [0, 1, 2, 10, 11, 12]
 
 
+def test_stream_xml_reads_latin1_file_like_read_xml(spark, tmp_path):
+    """A valid file declaring encoding="ISO-8859-1" streams: its bytes reach
+    the parser undecoded, so the stream yields exactly read_xml's rows."""
+    from xmlstreamprocessor_spark.plans import X
+    from xmlstreamprocessor_spark.sources import read_xml
+
+    doc = (
+        '<?xml version="1.0" encoding="ISO-8859-1"?>\n'
+        "<docs><rec><id>1</id><name>café</name></rec>"
+        "<rec><id>2</id><name>naïve ü</name></rec></docs>"
+    )
+    (tmp_path / "latin1.xml").write_bytes(doc.encode("latin-1"))
+    spec = X.struct("rec", {"id": X.nint("id"), "name": X.string("name")})
+    _drain(stream_xml(spark, str(tmp_path), "rec", spec), "t_xml_latin1")
+    got = spark.sql("SELECT * FROM t_xml_latin1 ORDER BY id").collect()
+    want = read_xml(spark, str(tmp_path), "rec", spec).orderBy("id").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert [tuple(r) for r in got] == [(1, "café"), (2, "naïve ü")]
+
+
 def test_stream_static_join(spark):
     from xmlstreamprocessor_spark.streaming import enrich_stream_static
 

@@ -347,9 +347,9 @@ def test_interleaved_readers_with_different_ns_modes():
 
 
 def test_match_memo_bounded_under_adversarial_tags():
-    """The localname->slot match memo must stay bounded when a document
-    stream contains more distinct tag names than _MATCH_MEMO_MAX, and
-    matching stays correct past the cap (unmemoized fallback scan)."""
+    """The generated kernel's tag->branch memo must stay bounded when a
+    document stream contains more distinct tag names than _MATCH_MEMO_MAX,
+    and matching stays correct past the cap (unmemoized fallback scan)."""
     from xmlstreamprocessor_spark.plans.spec import (
         _MATCH_MEMO_MAX,
         X,
@@ -364,7 +364,7 @@ def test_match_memo_bounded_under_adversarial_tags():
     doc = f"<r>{junk}<preXpost>wild</preXpost><target>7</target></r>"
     out = c.extract_string(doc)
     assert out == {"v": 7, "w": "wild"}
-    memo = spec._tables[-1]
-    assert len(memo) <= _MATCH_MEMO_MAX
-    # repeat parse reuses the compiled tables; results stay stable
+    [memo] = c._memos  # the root scope's memo
+    assert len(memo) == _MATCH_MEMO_MAX  # filled to the cap, never past it
+    # repeat parse reuses the compiled kernel; results stay stable
     assert c.extract_string(doc) == {"v": 7, "w": "wild"}

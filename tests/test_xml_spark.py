@@ -394,6 +394,55 @@ def test_read_xml_permissive_salvages_prefix(spark, tmp_path):
     assert sorted(r["n"] for r in dropped) == [1, 2, 3, 4]
 
 
+def test_read_xml_bounds_output_batches(spark, tmp_path):
+    """The file partition function hands Spark one frame per
+    maxRecordsPerBatch records: a file with more records than that comes
+    back as several frames holding exactly the unbounded run's rows, with
+    PERMISSIVE triage rows still aligned across the frame boundaries."""
+    import pandas as pd
+
+    from xmlstreamprocessor_spark.plans import compile_spec
+    from xmlstreamprocessor_spark.sources.xml_batch import _file_frames
+
+    recs = "".join(f"<rec><n>{i}</n></rec>" for i in range(23))
+    good = f"<docs>{recs}</docs>".encode()
+    bad = b"<docs><rec><n>100</n></rec><rec><n>101</n></rec><rec><n>1"
+    files = pd.DataFrame({"path": ["good.xml", "bad.xml"], "content": [good, bad]})
+    compiled = compile_spec(X.struct("rec", {"n": X.nint("n")}))
+
+    def run(batch_rows, mode="FAILFAST"):
+        fn = _file_frames("rec", compiled, batch_rows, mode)
+        return list(fn(iter([files.iloc[:1]] if mode == "FAILFAST" else [files])))
+
+    def rows(frames):  # per-frame dtype inference differs; values must not
+        return [
+            tuple(None if pd.isna(v) else v for v in r)
+            for f in frames
+            for r in f.itertuples(index=False)
+        ]
+
+    frames = run(5)
+    assert [len(f) for f in frames] == [5, 5, 5, 5, 3]
+    [whole] = run(10**9)
+    assert rows(frames) == rows([whole]) == [(i,) for i in range(23)]
+
+    frames = run(5, "PERMISSIVE")
+    assert [len(f) for f in frames] == [5, 5, 5, 5, 5, 1]
+    [whole] = run(10**9, "PERMISSIVE")
+    assert rows(frames) == rows([whole])
+    assert rows([whole])[-3:] == [(100, None), (101, None), (None, "bad.xml")]
+
+    # end to end: read_xml takes the batch size from the session conf
+    (tmp_path / "good.xml").write_bytes(good)
+    want = [r["n"] for r in read_xml(spark, str(tmp_path), "rec", compiled).collect()]
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+    try:
+        got = [r["n"] for r in read_xml(spark, str(tmp_path), "rec", compiled).collect()]
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert got == want == list(range(23))
+
+
 def test_xspxml_writer_roundtrip(spark, tmp_path):
     import datetime
     from decimal import Decimal

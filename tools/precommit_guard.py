@@ -3,14 +3,15 @@
 
 Round 6 ended with a snapshot commit that broke 52 tests because a
 half-finished ``plans/spec.py`` refactor shipped untested.  This guard runs
-the cheap, Spark-free portions of the suite — the golden Test1.cs ports and
-the pure-Python property round-trips — plus an import smoke of every package
-module, so a red kernel can never ship silently again (r6 verdict task #7).
+the cheap, Spark-free portions of the suite — the golden Test1.cs ports, the
+pure-Python property round-trips and the generated-kernel differential test —
+plus an import smoke of every package module, so a red kernel can never ship
+silently again (r6 verdict task #7).
 
 Wire-up: ``.git/hooks/pre-commit`` calls this script; it must exit 0 for the
 commit to proceed.  Bypass (emergencies only): ``git commit --no-verify``.
 
-Budget: the golden + property subset runs in ~20 s with no JVM startup.
+Budget: the fast subset runs in about a minute with no JVM startup.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FAST_TESTS = [
     "tests/test_xml_golden.py",
     "tests/test_property_roundtrip.py",
+    "tests/test_kernel_differential.py",
 ]
 
 

@@ -24,8 +24,10 @@ the registered source too.
 from __future__ import annotations
 
 import base64
+import datetime as _dt
+import itertools
 import pickle
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -194,61 +196,59 @@ class XmlSourceReader(DataSourceReader):
                 vals[k] = None
                 continue
             v = v.replace("%3D", "=").replace("%2F", "/").replace("%25", "%")
-            vals[k] = _coercer(fields[k])(v)
+            conv = _coercer(fields[k])
+            vals[k] = conv(v) if conv else v
         return vals
 
+    def _column_fixes(self, fpath: str, coerce: bool) -> list[tuple[int, Callable]]:
+        """Per-column fixes applied to the kernel's rows, as (column index,
+        fn) pairs.  Partition columns take their value from the path.  On
+        the schema path (``coerce``), attribute fallbacks surface as raw
+        strings (reference rule: attributes are untyped, Parser.cs:417) and
+        are coerced to the declared type.  Timestamps are localized to the
+        session zone (see __init__): naive datetimes become aware, so
+        Spark's tuple conversion (dt.timestamp()) and pyarrow's batch
+        conversion agree on the instant regardless of the worker's OS
+        zone."""
+        from zoneinfo import ZoneInfo
+
+        pvals = self._partition_values(fpath)
+        tz = ZoneInfo(self.session_tz)
+        fixes = []
+        for i, f in enumerate(self.schema.fields):
+            if f.name in pvals:
+                fn = _constant(pvals[f.name])
+            else:
+                fn = _coercer(f.dataType) if coerce else None
+            if f.dataType.typeName() == "timestamp":
+                fn = _localizer(tz, fn)
+            if fn is not None:
+                fixes.append((i, fn))
+        return fixes
+
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        from xmlstreamprocessor_spark.sources.xml_batch import iterparse_records
+        from xmlstreamprocessor_spark.sources.xml_batch import _iter_rows
 
         if self.spec_bytes is not None:
             compiled = pickle.loads(self.spec_bytes)
-            coerce = {}
         else:
             compiled = _schema_spec(self.schema)
-            # attribute fallbacks surface as raw strings (reference rule:
-            # attributes are untyped, Parser.cs:417); coerce them to the
-            # declared field type
-            coerce = {f.name: _coercer(f.dataType) for f in self.schema.fields}
-        names = [f.name for f in compiled.schema.fields]
+        names = compiled.names
         out_names = [f.name for f in self.schema.fields]
         assert names == out_names, (names, out_names)
-        pvals = self._partition_values(partition.path)
+        fixes = self._column_fixes(partition.path, coerce=self.spec_bytes is None)
 
-        # session-zone localization of parsed timestamps (see __init__):
-        # naive datetimes become aware, so Spark's tuple conversion
-        # (dt.timestamp()) and pyarrow's batch conversion agree on the
-        # instant regardless of the worker's OS zone
-        import datetime as _dtm
-        from zoneinfo import ZoneInfo as _ZoneInfo
-
-        _tz = _ZoneInfo(self.session_tz)
-        _ts_fields = {
-            f.name
-            for f in self.schema.fields
-            if f.dataType.typeName() == "timestamp"
-        }
-
-        def _one(n, rec):
-            if n in pvals:
-                v = pvals[n]
-            elif n in coerce:
-                v = coerce[n](rec.get(n))
-            else:
-                v = rec.get(n)
-            if (
-                n in _ts_fields
-                and isinstance(v, _dtm.datetime)
-                and v.tzinfo is None
-            ):
-                v = v.replace(tzinfo=_tz)
-            return v
-
-        def to_tuple(rec):
-            return tuple(_one(n, rec) for n in names)
+        def fix(row: tuple) -> tuple:
+            if not fixes:
+                return row
+            row = list(row)
+            for i, fn in fixes:
+                row[i] = fn(row[i])
+            return tuple(row)
 
         def rows(fh):
-            for rec in iterparse_records(fh, self.row_tag, compiled):
-                yield to_tuple(rec)
+            for row in _iter_rows(fh, self.row_tag, compiled):
+                yield fix(row)
 
         def triage_row():
             return tuple(
@@ -278,32 +278,18 @@ class XmlSourceReader(DataSourceReader):
                     from pyspark.sql.pandas.types import to_arrow_schema
 
                     pa_schema = to_arrow_schema(self.schema)
-                    # one Python list per COLUMN, built directly from the
-                    # parsed records — a single pass, vs the earlier
-                    # tuple -> dict re-zip -> from_pylist (three passes
-                    # per batch; judge-advice r11)
-                    cols: list[list] = [[] for _ in names]
-
-                    def flush():
-                        batch = pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(c, type=f.type)
-                                for c, f in zip(cols, pa_schema)
-                            ],
+                    rows_in = _iter_rows(fh, self.row_tag, compiled)
+                    while True:
+                        batch = list(itertools.islice(rows_in, self.arrow_batch))
+                        if not batch:
+                            return
+                        cols = [list(c) for c in zip(*batch)]
+                        for i, fn in fixes:
+                            cols[i] = [fn(v) for v in cols[i]]
+                        yield pa.RecordBatch.from_arrays(
+                            [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
                             schema=pa_schema,
                         )
-                        for c in cols:
-                            c.clear()
-                        return batch
-
-                    for rec in iterparse_records(fh, self.row_tag, compiled):
-                        for c, n in zip(cols, names):
-                            c.append(_one(n, rec))
-                        if len(cols[0]) >= self.arrow_batch:
-                            yield flush()
-                    if cols[0]:
-                        yield flush()
-                    return
                 yield from rows(fh)
                 return
             # non-FAILFAST: stream optimistically (zero overhead while the
@@ -345,7 +331,7 @@ class XmlSourceReader(DataSourceReader):
                 end = starts[i + 1] if i + 1 < len(starts) else size
                 fh.seek(off)
                 chunk = fh.read(end - off)
-                it = iterparse_records(io.BytesIO(chunk), self.row_tag, compiled)
+                it = _iter_rows(io.BytesIO(chunk), self.row_tag, compiled)
                 try:
                     rec = next(it)
                 except Exception:  # noqa: BLE001 — incl. StopIteration: no record
@@ -356,7 +342,7 @@ class XmlSourceReader(DataSourceReader):
                 if ok <= n_ok:
                     continue  # already emitted before the error
                 try:
-                    yield to_tuple(rec)
+                    yield fix(rec)
                 except Exception:  # noqa: BLE001 — bad cast in recovery
                     if self.mode == "PERMISSIVE":
                         yield triage_row()
@@ -433,7 +419,23 @@ def _scan_row_tag_offsets(
     return offsets
 
 
-def _coercer(dt):
+def _constant(value):
+    return lambda _v: value
+
+
+def _localizer(tz, inner: Callable | None) -> Callable:
+    def fn(v):
+        if inner is not None:
+            v = inner(v)
+        if isinstance(v, _dt.datetime) and v.tzinfo is None:
+            v = v.replace(tzinfo=tz)
+        return v
+
+    return fn
+
+
+def _coercer(dt) -> Callable | None:
+    """Raw attribute string -> declared type (None when untyped)."""
     from pyspark.sql import types as T
 
     from xmlstreamprocessor_spark.plans.spec import (
@@ -452,7 +454,7 @@ def _coercer(dt):
     elif isinstance(dt, T.TimestampType):
         conv = _conv_ndate
     else:
-        return lambda v: v
+        return None  # untyped: values pass through
 
     def f(v):
         return conv(v) if isinstance(v, str) else v

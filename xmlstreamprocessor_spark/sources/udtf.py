@@ -23,6 +23,8 @@ bulk pipelines; the UDTF is the SQL-surface adapter, per-row by API design.
 
 from __future__ import annotations
 
+import xml.etree.ElementTree as ET
+
 from pyspark.sql import types as T
 from pyspark.sql.functions import udtf
 
@@ -123,7 +125,6 @@ def xml_struct_udtf(
         raise ValueError(f"unknown on_error mode {on_error!r}")
     compiled: CompiledSpec = compile_spec(root, strict_ns=strict_ns)
     schema = compiled.schema
-    field_names = [f.name for f in schema.fields]
     skip = on_error == "skip"
 
     class XmlStructUdtf:
@@ -131,14 +132,14 @@ def xml_struct_udtf(
             if xml is None:
                 return
             try:
-                rec = compiled.extract_string(xml)
+                row = compiled.extract_row(ET.fromstring(xml))
             except Exception:
                 if skip:
                     return
                 raise
-            if rec is None:  # root element does not match the pattern
+            if row is None:  # root element does not match the pattern
                 return
-            yield tuple(rec.get(n) for n in field_names)
+            yield row
 
     return udtf(XmlStructUdtf, returnType=schema, useArrow=use_arrow)
 

@@ -10,21 +10,30 @@ the same bounded-memory contract *per task* but scales out:
   is paid once, vectorized, per batch — never per field.
 * ``read_xml(spark, path, row_tag, spec)`` — files -> records.  Each task
   streams its files with ``iterparse`` and ``elem.clear()`` after every
-  emitted record, so memory is O(record), not O(file) — the same contract as
-  the reference's ``reader.Skip()`` pruning (Parser.cs:194-202).
+  emitted record, and hands Spark a frame every
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` records, so memory is
+  O(record) plus one output batch, not O(file) — the same contract as the
+  reference's ``reader.Skip()`` pruning (Parser.cs:194-202).  ``stream_xml``
+  runs the same partition function over the streaming ``binaryFile`` source.
 
-At 100 TB the parallel unit is the file (or Kafka partition for streams);
-records flow straight into Arrow batches and downstream relational operators
-stay entirely JVM-side.
+Every surface drives one record loop, ``_iter_rows``, which yields the
+generated row function's tuples; output frames are built column-wise from
+those tuples, with no per-record dict.
 """
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import io
+import itertools
+import sys
 import xml.etree.ElementTree as ET
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from xmlstreamprocessor_spark.plans.spec import (
     CompiledSpec,
@@ -42,6 +51,23 @@ def _ensure_compiled(spec) -> CompiledSpec:
     raise TypeError("spec must be X.struct(...) or a CompiledSpec")
 
 
+@contextlib.contextmanager
+def _gc_deferred() -> Iterator[None]:
+    """Hold the cyclic garbage collector off while a batch fills.  Parsed
+    elements and the kernel's rows hold no reference cycles, so the
+    collections a fill would trigger only re-scan live objects (a fifth of
+    a files_hetero task's CPU time, measured); the one deferred collection
+    runs after the batch is handed over."""
+    if not gc.isenabled():
+        yield
+        return
+    gc.disable()
+    try:
+        yield
+    finally:
+        gc.enable()
+
+
 def extract_xml_records(xml_docs: Iterable[str], spec) -> list[dict]:
     """Local (single-process) extraction — the per-task kernel, exposed for
     tests and for parity with ``ParserTool.CreateParser`` usage."""
@@ -52,6 +78,125 @@ def extract_xml_records(xml_docs: Iterable[str], spec) -> list[dict]:
         if rec is not None:
             out.append(rec)
     return out
+
+
+def _iter_rows(source, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple]:
+    """The record loop: stream the elements matching ``row_tag`` out of one
+    XML source (end events only, ``clear()`` after each record) and yield
+    the generated row function's tuple for each one whose tag
+    also matches the spec's root pattern.
+
+    The namespace mode comes from ``compiled`` (fixed in its generated
+    code), never from module state, so interleaved readers with different
+    modes stay independent."""
+    row = compiled.kernel()
+    strict = compiled.strict_ns
+    root = compiled.root.pattern
+    every = root == "*" or root == row_tag
+    if "*" in row_tag or (not strict and "}" in row_tag):
+
+        def is_row(t: str) -> bool:
+            return match_pattern(row_tag, t if strict else t.rsplit("}", 1)[-1])
+
+    else:
+        is_row = None
+    for _, elem in ET.iterparse(source, events=("end",)):
+        t = elem.tag
+        if is_row is None:
+            # plain row tag: one string compare for every closing tag; a
+            # namespaced tag matches on its local name unless strict
+            if t != row_tag and (
+                strict or "}" not in t or t.rsplit("}", 1)[-1] != row_tag
+            ):
+                continue
+        elif not is_row(t):
+            continue
+        if every or compiled.matches(t):
+            yield row(elem)
+        elem.clear()
+
+
+def iterparse_records(source, row_tag: str, compiled: CompiledSpec) -> Iterator[dict]:
+    """Stream record elements matching ``row_tag`` out of one XML source with
+    bounded memory (iterparse + clear), emitting extracted dicts."""
+    names = compiled.names
+    return (dict(zip(names, row)) for row in _iter_rows(source, row_tag, compiled))
+
+
+def _frame(schema: T.StructType, rows: list[tuple]) -> pd.DataFrame:
+    """Column-wise pandas frame from row tuples (one C-level transpose).
+    Decimal columns skip pandas' per-value type inference, which would
+    leave them object-typed anyway."""
+    cols = zip(*rows) if rows else ([] for _ in schema.fields)
+    return pd.DataFrame(
+        {
+            f.name: pd.Series(c, dtype=object)
+            if isinstance(f.dataType, T.DecimalType)
+            else list(c)
+            for f, c in zip(schema.fields, cols)
+        }
+    )
+
+
+def _arrow_batch_rows(spark: SparkSession) -> int:
+    """Records per output frame: Spark's own Arrow batch size (<= 0 means
+    unbounded, as in Spark)."""
+    n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    return n if n > 0 else sys.maxsize
+
+
+def _file_frames(
+    row_tag: str,
+    compiled: CompiledSpec,
+    batch_rows: int,
+    mode: str = "FAILFAST",
+    corrupt_column: str = "_corrupt_file",
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` function shared by ``read_xml`` and
+    ``stream_xml``: (path, content) file batches in, row frames of at most
+    ``batch_rows`` records out.  A malformed file fails the task
+    (FAILFAST), or keeps the records parsed before the failure point plus,
+    under PERMISSIVE, one all-null triage row naming the file."""
+    null_row = (None,) * len(compiled.names)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows: list[tuple] = []
+        triage: list[tuple[int, str]] = []  # (row index, failing file)
+
+        def flush() -> pd.DataFrame:
+            pdf = _frame(compiled.schema, rows)
+            if mode == "PERMISSIVE":
+                corrupt: list[str | None] = [None] * len(rows)
+                for i, fpath in triage:
+                    corrupt[i] = fpath
+                pdf[corrupt_column] = corrupt
+                triage.clear()
+            rows.clear()
+            return pdf
+
+        for pdf in batches:
+            for fpath, content in zip(pdf["path"], pdf["content"]):
+                it = _iter_rows(io.BytesIO(content), row_tag, compiled)
+                done = False
+                while not done:
+                    try:
+                        # extend() keeps the rows parsed before an error
+                        with _gc_deferred():
+                            rows.extend(itertools.islice(it, batch_rows - len(rows)))
+                        done = len(rows) < batch_rows  # file exhausted
+                    except Exception:
+                        if mode == "FAILFAST":
+                            raise
+                        done = True
+                        if mode == "PERMISSIVE":
+                            triage.append((len(rows), fpath))
+                            rows.append(null_row)
+                    if len(rows) >= batch_rows:
+                        yield flush()
+        if rows:
+            yield flush()
+
+    return run
 
 
 def _jvm_safe(compiled: CompiledSpec) -> bool:
@@ -147,8 +292,6 @@ def extract_xml(
             except ValueError:
                 pass  # not expressible on the fast path -> python kernel
     schema = compiled.schema
-    names = [f.name for f in schema.fields]
-    from pyspark.sql import types as T
 
     # a root-pattern MISMATCH yields a None record -> a row null in EVERY
     # data field (and PERMISSIVE corrupt rows do the same), so non-nullable
@@ -171,55 +314,32 @@ def extract_xml(
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
 
+    null_row = (None,) * len(schema.fields)
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict | None] = []
+            rows: list[tuple] = []
             corrupt: list[str | None] = []
-            for x in pdf[col]:
-                try:
-                    rows.append(compiled.extract_string(x))
-                    corrupt.append(None)
-                except Exception:
-                    if mode == "FAILFAST":
-                        raise
+            with _gc_deferred():
+                for x in pdf[col]:
+                    try:
+                        row = compiled.extract_row(ET.fromstring(x))
+                    except Exception:
+                        if mode == "FAILFAST":
+                            raise
+                        if mode == "PERMISSIVE":
+                            rows.append(null_row)
+                            corrupt.append(x)
+                        continue  # DROPMALFORMED: emit nothing
+                    rows.append(null_row if row is None else row)
                     if mode == "PERMISSIVE":
-                        rows.append(None)
-                        corrupt.append(x)
-                    # DROPMALFORMED: emit nothing
-            data = {
-                n: [r.get(n) if r is not None else None for r in rows] for n in names
-            }
+                        corrupt.append(None)
+            out = _frame(schema, rows)
             if mode == "PERMISSIVE":
-                data[corrupt_column] = corrupt
-            yield pd.DataFrame(data)
+                out[corrupt_column] = corrupt
+            yield out
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def iterparse_records(source, row_tag: str, compiled: CompiledSpec) -> Iterator[dict]:
-    """Stream record elements matching ``row_tag`` out of one XML source with
-    bounded memory (iterparse + clear), emitting extracted dicts.
-
-    The namespace mode is taken from ``compiled`` PER RECORD, never from
-    ambient module state (judge-advice r3): this generator yields between
-    records, so two interleaved readers with different ``strict_ns`` modes
-    (unioned streams, alternating slices) must not see each other's flag.
-    ``compiled.extract_element`` re-asserts the mode on every call, and the
-    row-tag match below derives the local name from the compiled flag
-    directly."""
-    strict = getattr(compiled, "strict_ns", False)
-    depth = 0
-    for event, elem in ET.iterparse(source, events=("start", "end")):
-        if event == "start":
-            depth += 1
-            continue
-        depth -= 1
-        tag_name = elem.tag if strict else elem.tag.rsplit("}", 1)[-1]
-        if match_pattern(row_tag, tag_name):
-            rec = compiled.extract_element(elem)
-            if rec is not None:
-                yield rec
-            elem.clear()
 
 
 def read_xml(
@@ -232,9 +352,11 @@ def read_xml(
     corrupt_column: str = "_corrupt_file",
 ) -> DataFrame:
     """Read XML files under ``path``, emitting one row per ``row_tag``
-    element.  Parallelism is per-file; for a directory of N files Spark
-    schedules N splits (use more, smaller files at scale — same guidance as
-    any non-splittable format).
+    element.  A file is never split: ``binaryFile`` packs whole files into
+    tasks by size (``spark.sql.files.maxPartitionBytes`` and
+    ``openCostInBytes``), so a directory of 16 small files runs as a few
+    multi-file tasks, and one large file runs on one core.
+    ``min_partitions`` repartitions the file list first.
 
     ``mode``: ``FAILFAST`` (default — a malformed file aborts the job, the
     reference's semantics), ``PERMISSIVE`` (records parsed before the
@@ -246,7 +368,6 @@ def read_xml(
         raise ValueError(f"unknown mode {mode!r}")
     compiled = _ensure_compiled(spec)
     schema = compiled.schema
-    names = [f.name for f in schema.fields]
     out_schema = schema
     if mode == "PERMISSIVE":
         from pyspark.sql import types as T
@@ -259,31 +380,9 @@ def read_xml(
     files_df = spark.read.format("binaryFile").load(path).select("path", "content")
     if min_partitions:
         files_df = files_df.repartition(min_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rows: list[dict] = []
-            corrupt: list[str | None] = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    for rec in iterparse_records(
-                        io.BytesIO(content), row_tag, compiled
-                    ):
-                        rows.append(rec)
-                        corrupt.append(None)
-                except Exception:
-                    if mode == "FAILFAST":
-                        raise
-                    if mode == "PERMISSIVE":
-                        rows.append({})
-                        corrupt.append(fpath)
-            data = {n: [r.get(n) for r in rows] for n in names}
-            if mode == "PERMISSIVE":
-                data[corrupt_column] = corrupt
-            yield pd.DataFrame(data)
-
+    run = _file_frames(
+        row_tag, compiled, _arrow_batch_rows(spark), mode, corrupt_column
+    )
     return files_df.mapInPandas(run, schema=out_schema)
 
 
@@ -808,9 +907,10 @@ def extract_xml_jvm(
     names = [sf.name for sf in schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xmlstreamprocessor_spark.plans.spec import _set_strict_ns
+        from xmlstreamprocessor_spark.plans.spec import compile_slot
 
-        _set_strict_ns(False)
+        # one generated value function per routed field, built per task
+        parse = {name: compile_slot(slot) for name, slot in py_specs}
         for pdf in batches:
             pdf = pdf.reset_index(drop=True)
             for name in names:
@@ -832,7 +932,7 @@ def extract_xml_jvm(
                             "extract_xml (python kernel)"
                         )
                     else:
-                        vals.append(slot.parse(ET.fromstring(raw)))
+                        vals.append(parse[name](ET.fromstring(raw)))
                 pdf[name] = pd.Series(vals, dtype=object)
             yield pdf[names]
 

@@ -12,7 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from xmlstreamprocessor_spark.plans.spec import CompiledSpec, Struct
-from xmlstreamprocessor_spark.sources.xml_batch import _ensure_compiled
+from xmlstreamprocessor_spark.sources.xml_batch import (
+    _arrow_batch_rows,
+    _ensure_compiled,
+    _file_frames,
+)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,6 +53,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
+# the binaryFile source's fixed output schema; a file stream needs it
+# declared up front
+BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length bigint, content binary"
+)
+
+
 def stream_xml(
     spark: SparkSession,
     path: str,
@@ -59,39 +70,21 @@ def stream_xml(
     """Streaming XML extraction: watch ``path`` for files, emit one row per
     ``row_tag`` element using the compiled extraction spec.
 
-    Files are consumed via the text file source in wholetext mode (each file
-    one record — the parallel unit, as in batch read_xml) and shredded with
-    the same bounded-memory kernel; downstream ops (watermarks, windows,
-    joins) are ordinary Structured Streaming.  ``max_files_per_trigger``
-    bounds each micro-batch (and makes multi-batch replay deterministic in
-    tests — files are picked up in modification-time order)."""
-    import io
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    Files arrive through the streaming ``binaryFile`` source as raw bytes,
+    so the parser honours each file's declared encoding, and are shredded
+    by the same partition function as batch ``read_xml`` (FAILFAST, output
+    frames bounded by Spark's Arrow batch size).  Downstream ops
+    (watermarks, windows, joins) are ordinary Structured Streaming.
+    ``max_files_per_trigger`` bounds each micro-batch (and makes
+    multi-batch replay deterministic in tests — files are picked up in
+    modification-time order)."""
     compiled = _ensure_compiled(spec)
-    schema = compiled.schema
-    names = [f.name for f in schema.fields]
-    r = spark.readStream.format("text").option("wholetext", "true")
+    r = spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
     if max_files_per_trigger is not None:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = r.load(path)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xmlstreamprocessor_spark.sources.xml_batch import iterparse_records
-
-        for pdf in batches:
-            rows: list[dict] = []
-            for content in pdf["value"]:
-                rows.extend(
-                    iterparse_records(
-                        io.BytesIO(content.encode("utf-8")), row_tag, compiled
-                    )
-                )
-            yield pd.DataFrame({n: [r.get(n) for r in rows] for n in names})
-
-    return raw.mapInPandas(run, schema=schema)
+    raw = r.load(path).select("path", "content")
+    run = _file_frames(row_tag, compiled, _arrow_batch_rows(spark))
+    return raw.mapInPandas(run, schema=compiled.schema)
 
 
 # the Kafka source's fixed output schema (Spark structured-streaming docs);
