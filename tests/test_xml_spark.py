@@ -105,29 +105,57 @@ def test_jvm_path_rejects_wildcards(spark):
     import pytest
 
     from xmlstreamprocessor_spark.plans import X
-    from xmlstreamprocessor_spark.sources.xml_batch import extract_xml_jvm
+    from xmlstreamprocessor_spark.sources.xml_batch import extract_xml, extract_xml_jvm
 
     docs = spark.createDataFrame([("<a/>",)], ["doc"])
     with pytest.raises(ValueError, match="wildcard"):
         extract_xml_jvm(docs, "doc", X.struct("r", {"x": X.string("pre*")}))
-    # a wildcard-NAMED top-level field cannot be addressed by from_xml OR
-    # the span regexp, so it is not even hybrid-routable
     with pytest.raises(ValueError, match="wildcard"):
         extract_xml_jvm(
             docs, "doc", X.struct("r", {"c": X.struct("c*", {"k": X.tag()})})
         )
-    # with the hybrid disabled (auto-dispatch mode), an interior the JVM
-    # cannot express fails instead of routing to the span kernel
+    # an interior the JVM cannot express fails the whole spec
     with pytest.raises(ValueError, match="wildcard"):
         extract_xml_jvm(
-            docs,
-            "doc",
-            X.struct("r", {"c": X.struct("c", {"k": X.string("s*")})}),
-            below_root=False,
+            docs, "doc", X.struct("r", {"c": X.struct("c", {"k": X.string("s*")})})
         )
     assert extract_xml_jvm(
         docs, "doc", X.struct("r", {"k": X.tag()})
     ).columns == ["k"]
+
+    # the GenericTest shape (Test1.cs:50,136): Tag()-discriminated wildcard
+    # children under an array container below the root.  extract_xml_jvm
+    # rejects it; auto-dispatch runs it on the Python kernel, row-identical
+    # to engine="python"
+    gspec = X.struct(
+        "sample2",
+        {
+            "tag": X.tag(),
+            "someint": X.int_("someint"),
+            "subclasses": X.array(
+                "subclasses",
+                X.struct("*", {"tag": X.tag(), "someint": X.int_("someint")}),
+            ),
+        },
+    )
+    gdocs = spark.createDataFrame(
+        [
+            ("<sample2><someint>1</someint><subclasses><subclass/>"
+             "<subanotherclass><someint>3</someint></subanotherclass>"
+             "</subclasses></sample2>",),
+            ("<sample2><someint>5</someint><subclasses/></sample2>",),
+            ("<sample2/>",),
+        ],
+        ["doc"],
+    )
+    with pytest.raises(ValueError):
+        extract_xml_jvm(gdocs, "doc", gspec)
+    auto = extract_xml(gdocs, "doc", gspec)
+    assert "MapInPandas" in auto._jdf.queryExecution().executedPlan().toString()
+    assert [r.asDict(recursive=True) for r in auto.collect()] == [
+        r.asDict(recursive=True)
+        for r in extract_xml(gdocs, "doc", gspec, engine="python").collect()
+    ]
 
 
 def test_jvm_path_nested_struct(spark):
@@ -1123,9 +1151,8 @@ def test_jvm_hybrid_root_wildcard_and_tag(spark):
         for r in extract_xml(ddf, "doc", deep, engine="python").collect()
     ]
     # ... but under a WILDCARD-named element the name is data-dependent:
-    # not JVM-expressible, and not hybrid-routable either (the span
-    # regexp cannot address a wildcard), so the whole spec raises and
-    # auto dispatch falls back to the Python kernel
+    # not JVM-expressible, so the whole spec raises and auto dispatch
+    # falls back to the Python kernel
     wdeep = X.struct(
         "root", {"child": X.struct("c*", {"kind": X.tag()})}
     )
@@ -1173,7 +1200,7 @@ def test_jvm_hybrid_prolog_and_failfast(spark):
     with _pytest.raises((Py4JJavaError, PythonException, Exception)):
         extract_xml(bad, "doc", spec).collect()
 
-def _both_paths(spark, docs, spec, **kw):
+def _both_paths(spark, docs, spec):
     from xmlstreamprocessor_spark.sources.xml_batch import (
         extract_xml,
         extract_xml_jvm,
@@ -1186,7 +1213,7 @@ def _both_paths(spark, docs, spec, **kw):
     ]
     jv = [
         r.asDict(recursive=True)
-        for r in extract_xml_jvm(df, "doc", spec, **kw).collect()
+        for r in extract_xml_jvm(df, "doc", spec).collect()
     ]
     assert py == jv, f"kernel/JVM divergence:\n py={py}\njvm={jv}"
     return py
@@ -1224,98 +1251,11 @@ def test_jvm_first_occurrence_wins_parity(spark):
     assert rows[1]["s"] == "  padded  "
 
 
-def test_jvm_hybrid_below_root_generic_shape(spark):
-    """r9 verdict #1 — the GenericTest shape (Test1.cs:50,136):
-    heterogeneous children with Tag() discriminators under an array
-    container, below the root.  The hybrid path parses every fixed field
-    with from_xml, captures the container's raw SOURCE span with one
-    guarded regexp, and runs the narrow kernel on that column only —
-    kernel-identical results, including the reference's golden semantics
-    (missing someint -> 0 via default(int), missing subsubclass -> null,
-    document order, unknown `<a>` children skipped)."""
-    from xmlstreamprocessor_spark.plans import X
-
-    gspec = X.struct(
-        "sample2",
-        {
-            "tag": X.tag(),
-            "someint": X.int_("someint"),
-            "somestring": X.string("somestring"),
-            "subclasses": X.array(
-                "subclasses",
-                X.struct(
-                    "*",
-                    {
-                        "tag": X.tag(),
-                        "someint": X.int_("someint"),
-                        "sub": X.struct(
-                            "subsubclass",
-                            {"somestring": X.string("somestring"), "tag": X.tag()},
-                        ),
-                    },
-                ),
-            ),
-        },
-    )
-    gdoc = (
-        "<sample2 attr1='z'><a/><a><b/></a><a/><someint>1</someint>"
-        "<somestring>asd</somestring>"
-        "<subclasses attr2='x'><subclass/><subclass><someint>2</someint>"
-        "<subsubclass><somestring>zzz</somestring></subsubclass></subclass>"
-        "<subanotherclass><someint>3</someint><subsubclass></subsubclass>"
-        "</subanotherclass><subclass></subclass></subclasses></sample2>"
-    )
-    rows = _both_paths(
-        spark,
-        [
-            gdoc,
-            "<sample2><someint>9</someint><somestring>q</somestring></sample2>",
-            "<sample2><someint>5</someint><subclasses/></sample2>",
-        ],
-        gspec,
-    )
-    # the reference's golden expectation for GenericTest (Test1.cs:68-95)
-    assert rows[0]["subclasses"] == [
-        {"tag": "subclass", "someint": 0, "sub": None},
-        {"tag": "subclass", "someint": 2,
-         "sub": {"somestring": "zzz", "tag": "subsubclass"}},
-        {"tag": "subanotherclass", "someint": 3,
-         "sub": {"somestring": None, "tag": "subsubclass"}},
-        {"tag": "subclass", "someint": 0, "sub": None},
-    ]
-    assert rows[1]["subclasses"] is None  # missing container -> default(T)
-    assert rows[2]["subclasses"] == []  # present but empty -> no emits
-
-
-def test_jvm_hybrid_span_ambiguity_raises(spark):
-    """The hybrid span capture is honest: when the container tag occurs
-    more than once in the document (repeated direct children, nesting, or
-    the tag inside a comment), a regexp cannot pin the span the kernel
-    would parse, so the path raises a descriptive error instead of ever
-    silently diverging."""
-    import pytest as _pytest
-
-    from xmlstreamprocessor_spark.plans import X
-    from xmlstreamprocessor_spark.sources.xml_batch import extract_xml_jvm
-
-    spec = X.struct("r", {"c": X.array("c", X.struct("*", {"t": X.tag()}))})
-    for doc in (
-        "<r><c><a/></c><c><b/></c></r>",  # repeated container
-        "<!-- has a <c> token --><r><c><a/></c></r>",  # tag in a comment
-    ):
-        df = spark.createDataFrame([(doc,)], "doc string")
-        with _pytest.raises(Exception, match="ambiguous"):
-            extract_xml_jvm(df, "doc", spec).collect()
-
-
 def test_jvm_hybrid_mixed_content_strings(spark):
-    """Mixed-content folding (Parser.cs:44-49) on the hybrid path:
-    strings="python" routes top-level string fields through the raw-span
-    kernel, reproducing the reference's serialization of child elements
-    back into the value — entities, CDATA, and surrounding whitespace
-    included.  The default strings="jvm" keeps text-only strings fully
-    JVM-side but raises on captured markup rather than guessing between
-    mixed content and text that escaped '<'."""
+    """Element strings on the JVM path: text-only values (entities,
+    surrounding whitespace, missing elements) stay kernel-identical, but
+    captured markup raises rather than guessing between mixed content
+    (Parser.cs:44-49) and text that escaped '<'."""
     import pytest as _pytest
 
     from xmlstreamprocessor_spark.plans import X
@@ -1325,58 +1265,26 @@ def test_jvm_hybrid_mixed_content_strings(spark):
     rows = _both_paths(
         spark,
         [
-            "<r><s>Test with a <more/> child element stuff</s><i>1</i></r>",
-            "<r><s>plain &amp; text</s></r>",
-            "<r><s><![CDATA[cd <x> text]]></s></r>",
+            "<r><s>plain &amp; text</s><i>3</i></r>",
             "<r><s> keep  spaces </s></r>",
             "<r><i>2</i></r>",
         ],
         spec,
-        strings="python",
     )
-    assert rows[0]["s"] == "Test with a <more /> child element stuff"
-    # text-only strings need no python stage and stay kernel-identical
-    _both_paths(spark, ["<r><s>plain &amp; text</s><i>3</i></r>"], spec)
-    # ... but captured markup on the default path raises, never guesses
+    assert rows[0]["s"] == "plain & text"
+    # captured markup on the JVM string path raises, never guesses
     df = spark.createDataFrame([("<r><s>a <b/> c</s></r>",)], "doc string")
     with _pytest.raises(Exception, match="mixed content"):
         extract_xml_jvm(df, "doc", spec).collect()
-
-
-def test_jvm_hybrid_custom_parser(spark):
-    """Custom parsers (Parser.cs:318-331) ride the same hybrid route: the
-    field's source span re-parses to the exact element the full kernel
-    would hand the user fn — attributes, entities, children intact."""
-    from pyspark.sql import types as T
-
-    from xmlstreamprocessor_spark.plans import X
-
-    spec = X.struct(
-        "r",
-        {
-            "i": X.nint("i"),
-            "c": X.custom(
-                "c",
-                lambda e: f"{e.get('k')}:{(e.findtext('v') or '')}",
-                T.StringType(),
-            ),
-        },
-    )
-    rows = _both_paths(
-        spark,
-        ['<r><i>1</i><c k="a"><v>x &amp; y</v></c></r>', "<r><i>2</i></r>"],
-        spec,
-    )
-    assert rows[0]["c"] == "a:x & y" and rows[1]["c"] is None
 
 
 def test_jvm_hybrid_adversarial_prolog_fuzz(spark):
     """r8 verdict #8: property-style sweep comparing both execution paths
     on adversarially-prologued documents — pre-root comments containing
     '<word' tokens, XML declarations, DOCTYPE variants, Unicode tag
-    names, and namespace-prefixed attributes — across a root-wildcard
-    Tag() spec AND a below-root hybrid spec.  Any divergence (including
-    the prolog hijacking the root name or the span capture) fails."""
+    names, and namespace-prefixed attributes — through a root-wildcard
+    Tag() spec.  Any divergence (including the prolog hijacking the root
+    name) fails."""
     from xmlstreamprocessor_spark.plans import X
 
     prologs = [
@@ -1399,31 +1307,15 @@ def test_jvm_hybrid_adversarial_prolog_fuzz(spark):
         "t_*", {"kind": X.tag(), "eid": X.attr("eid"), "n": X.int_("n")}
     )
     _both_paths(spark, docs, root_spec)
-    hybrid_spec = X.struct(
-        "*",
-        {
-            "kind": X.tag(),
-            "n": X.nint("n"),
-            "meta": X.array("meta", X.struct("*", {"t": X.tag(), "v": X.nint("v")})),
-        },
-    )
-    _both_paths(spark, docs, hybrid_spec)
 
 
-def test_udtf_arrow_parity(spark):
-    """r9 verdict #4: Arrow-optimized UDTF evaluation (use_arrow=True —
-    OPT-IN, the A/B walls measured it 5-12x slower for these per-row
-    struct yields, see udtf.py docstring) returns the same values as
-    pickled-row evaluation for every spec dtype the UDTFs emit
-    (string/attr, decimal, timestamp, ints) and keeps the on_error
-    contract: fail propagates a malformed document, skip drops it."""
+def test_udtf_struct_on_error_fail_and_skip(spark):
+    """The struct UDTF's on_error contract: fail propagates a malformed
+    document, skip drops it."""
     import pytest as _pytest
 
     from xmlstreamprocessor_spark.plans import X
-    from xmlstreamprocessor_spark.sources.udtf import (
-        register_xml_array_udtf,
-        register_xml_struct_udtf,
-    )
+    from xmlstreamprocessor_spark.sources.udtf import register_xml_struct_udtf
 
     spec = X.struct(
         "order",
@@ -1435,42 +1327,11 @@ def test_udtf_arrow_parity(spark):
             "n": X.int_("n"),
         },
     )
-    docs = [
-        '<order id="7"><prio>a</prio><total>12.34</total>'
-        "<odate>1995-01-02 03:04:05</odate><n>3</n></order>",
-        '<order id="8"><prio></prio><total></total></order>',
-        "<nope/>",
-    ]
-    df = spark.createDataFrame([(d,) for d in docs], "doc string")
-    df.createOrReplaceTempView("u_parity_docs")
-    q = "SELECT s.* FROM u_parity_docs d, LATERAL {f}(d.doc) s"
-    register_xml_struct_udtf(spark, "u_par_arrow", spec, use_arrow=True)
-    register_xml_struct_udtf(spark, "u_par_plain", spec, use_arrow=False)
-    assert [tuple(r) for r in spark.sql(q.format(f="u_par_arrow")).collect()] == [
-        tuple(r) for r in spark.sql(q.format(f="u_par_plain")).collect()
-    ]
-
-    register_xml_array_udtf(
-        spark, "u_arr_arrow", "items", X.ndecimal("q"), use_arrow=True
-    )
-    register_xml_array_udtf(
-        spark, "u_arr_plain", "items", X.ndecimal("q"), use_arrow=False
-    )
-    adf = spark.createDataFrame(
-        [("<items><q>1.5</q><q></q><q>2</q></items>",), ("<items/>",)],
-        "doc string",
-    )
-    adf.createOrReplaceTempView("u_parity_adocs")
-    aq = "SELECT s.* FROM u_parity_adocs d, LATERAL {f}(d.doc) s"
-    assert [tuple(r) for r in spark.sql(aq.format(f="u_arr_arrow")).collect()] == [
-        tuple(r) for r in spark.sql(aq.format(f="u_arr_plain")).collect()
-    ]
-
-    # error contract survives the Arrow path
+    register_xml_struct_udtf(spark, "u_par_fail", spec)
     bad = spark.createDataFrame([('<order id="1"',)], "doc string")
     bad.createOrReplaceTempView("u_parity_bad")
     with _pytest.raises(Exception):
-        spark.sql("SELECT s.* FROM u_parity_bad d, LATERAL u_par_arrow(d.doc) s").collect()
+        spark.sql("SELECT s.* FROM u_parity_bad d, LATERAL u_par_fail(d.doc) s").collect()
     register_xml_struct_udtf(spark, "u_par_skip", spec, on_error="skip")
     assert (
         spark.sql(
@@ -1478,83 +1339,6 @@ def test_udtf_arrow_parity(spark):
         ).count()
         == 0
     )
-
-
-def test_jvm_hybrid_content_fuzz(spark):
-    """r9: hypothesis-driven CONTENT fuzz of the GenericTest-shaped hybrid
-    vs the Python kernel — random field presence, entity-escaped text
-    (``&``, quotes, unicode), whitespace-only strings (both paths must
-    preserve, never trim), empty scalars, and random heterogeneous
-    wildcard children under the array container.  Complements the
-    adversarial-PROLOG sweep: that one fuzzes the document's framing,
-    this one fuzzes the values flowing through every slot type the
-    hybrid routes (attr, string, nint, Tag(), wildcard array children).
-    '<' is excluded from generated text: a captured '<' is the hybrid's
-    DOCUMENTED divergence seam (it raises, steering to the kernel)."""
-    from hypothesis import given, settings, strategies as st
-    from xml.sax.saxutils import escape, quoteattr
-
-    from xmlstreamprocessor_spark.plans import X
-
-    # text safe for both element content (escaped) and attribute values:
-    # any printable unicode except '<' (the documented raise seam); '&'
-    # and quotes round-trip through escaping
-    text = st.text(
-        alphabet=st.characters(
-            codec="utf-8",
-            exclude_characters="<",
-            exclude_categories=("Cs", "Cc"),
-        ),
-        max_size=12,
-    )
-    child = st.tuples(
-        st.sampled_from(["m_a", "m_b", "zz", "k9"]),  # never 'meta'
-        st.one_of(st.none(), st.integers(-999, 999)),
-    )
-    doc = st.fixed_dictionaries(
-        {
-            "eid": text,
-            "note": st.one_of(st.none(), text, st.just("   ")),
-            "n": st.one_of(st.none(), st.just(""), st.integers(-9999, 9999)),
-            "kids": st.lists(child, max_size=4),
-            "skip_meta": st.booleans(),
-        }
-    )
-
-    def render(d) -> str:
-        parts = [f"<order id={quoteattr(d['eid'])}>"]
-        if d["note"] is not None:
-            parts.append(f"<note>{escape(d['note'])}</note>")
-        if d["n"] is not None:
-            parts.append(f"<n>{escape(str(d['n']))}</n>")
-        if not d["skip_meta"]:
-            parts.append("<meta>")
-            for tag, v in d["kids"]:
-                parts.append(
-                    f"<{tag}/>" if v is None else f"<{tag}><v>{v}</v></{tag}>"
-                )
-            parts.append("</meta>")
-        parts.append("</order>")
-        return "".join(parts)
-
-    spec = X.struct(
-        "order",
-        {
-            "eid": X.attr("id"),
-            "note": X.string("note"),
-            "n": X.nint("n"),
-            "meta": X.array(
-                "meta", X.struct("*", {"kind": X.tag(), "v": X.nint("v")})
-            ),
-        },
-    )
-
-    @settings(max_examples=6, deadline=None)
-    @given(st.lists(doc, min_size=1, max_size=25))
-    def check(batch):
-        _both_paths(spark, [render(d) for d in batch], spec)
-
-    check()
 
 
 def test_xspxml_registered_queries(spark):

@@ -83,8 +83,8 @@ def xml_roundtrip_wildcard_tag_events(spark, sf_dir):
     recovers the name as a value — the reference's heterogeneous-children
     pattern (Test1.cs:50,136).  Pinned to the Python kernel (engine=
     "python") so the iterparse surface keeps its own driver verdict now
-    that root-level wildcard/Tag specs auto-dispatch to the JVM hybrid —
-    the _jvm twin covers that path."""
+    that root-level wildcard/Tag specs auto-dispatch to the JVM
+    ``from_xml`` path — the _jvm twin covers that path."""
     e = t(spark, sf_dir, "events")
     doc = F.concat(
         F.lit("<t_"), F.col("event_type"),
@@ -103,7 +103,7 @@ def xml_roundtrip_wildcard_tag_events(spark, sf_dir):
 )
 def xml_roundtrip_wildcard_tag_events_jvm(spark, sf_dir):
     """Same contract as xml_roundtrip_wildcard_tag_events but through the
-    hybrid ``from_xml`` fast path (r7 verdict #2): the root NAME comes
+    ``from_xml`` fast path (r7 verdict #2): the root NAME comes
     from one anchored regexp, the wildcard test is JVM string algebra,
     and the whole extraction stays inside whole-stage codegen — the spec
     shape that previously paid the Python kernel unconditionally (the 5.5x
@@ -400,9 +400,9 @@ def xml_roundtrip_hetero_meta(spark, sf_dir):
     Test1.cs:50,136): an array container whose heterogeneous children are
     discriminated by their element NAME (wildcard match, Parser.cs:175-187
     + Tag() capture, Parser.cs:402-405), alongside typed fixed fields.
-    Extraction is pinned to the Python iterparse kernel; the _jvm twin
-    runs the identical spec through the r9 hybrid span path — same oracle,
-    both must agree bit-for-bit."""
+    Extraction is pinned to the Python kernel; the _jvm twin runs the
+    identical spec through auto-dispatch — same oracle, both must agree
+    bit-for-bit."""
     o = t(spark, sf_dir, "orders")
     ex = extract_xml(
         o.select(_hetero_meta_doc().alias("doc")), "doc", _hetero_meta_spec(),
@@ -413,13 +413,14 @@ def xml_roundtrip_hetero_meta(spark, sf_dir):
 
 @query("xml_roundtrip_hetero_meta_jvm", oracle=_HETERO_META_ORACLE)
 def xml_roundtrip_hetero_meta_jvm(spark, sf_dir):
-    """Same contract as xml_roundtrip_hetero_meta through the r9 HYBRID
-    path: from_xml parses the fixed fields (whole-stage codegen), one
-    guarded regexp captures the `<meta>` container's raw source span, and
-    the Arrow kernel parses ONLY that narrow column — Python cost scales
-    with the container's bytes, not the document's."""
+    """Same contract as xml_roundtrip_hetero_meta via auto-dispatch:
+    pins that ``engine="auto"`` sends this below-root shape (wildcard
+    children and ``Tag()`` inside the `<meta>` container, which
+    ``from_xml`` cannot express) to the Python kernel, with the same rows.
+    The ``_jvm`` name is kept for registry stability."""
     o = t(spark, sf_dir, "orders")
-    ex = extract_xml_jvm(
-        o.select(_hetero_meta_doc().alias("doc")), "doc", _hetero_meta_spec()
+    ex = extract_xml(
+        o.select(_hetero_meta_doc().alias("doc")), "doc", _hetero_meta_spec(),
+        engine="auto",
     )
     return _hetero_meta_project(ex)

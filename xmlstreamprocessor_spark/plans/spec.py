@@ -785,17 +785,6 @@ class _Codegen:
         self.defs.append("\n".join(lines))
         return fname
 
-    def value_fn(self, slot: _Slot) -> str:
-        """``def`` computing one element slot's value from its own element."""
-        if isinstance(slot, Struct):
-            return self.struct_fn(slot)
-        if isinstance(slot, Arr):
-            return self.arr_fn(slot)
-        fname = self._name("_p")
-        lines = [f"def {fname}(c):", *self._parse(slot, "v", "    "), "    return v"]
-        self.defs.append("\n".join(lines))
-        return fname
-
     def build(self, fname: str) -> Callable[[Any], Any]:
         """Exec the generated source and return the named function."""
         src = self.source()
@@ -924,9 +913,3 @@ def compile_array_spec(
 ) -> CompiledArraySpec:
     return CompiledArraySpec(container_pattern, inner, strict_ns=strict_ns)
 
-
-def compile_slot(slot: _Slot, strict_ns: bool = False) -> Callable[[Any], Any]:
-    """Generated function: the element one element slot reads -> that
-    slot's value (a struct's dict, an array's list, a converted scalar)."""
-    gen = _Codegen(strict_ns)
-    return gen.build(gen.value_fn(slot))

@@ -498,10 +498,10 @@ def _schema_spec(schema: StructType) -> CompiledSpec:
 
 
 def register_xml_source(spark) -> None:
+    """Register the ``xspxml`` format on this session."""
     # the reader implements pushFilters(); Spark refuses to instantiate it
     # unless python-source pushdown is on (runtime-settable SQL conf)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    """Register the ``xspxml`` format on this session."""
     spark.dataSource.register(XmlDataSource)
 
 

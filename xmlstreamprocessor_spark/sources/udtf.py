@@ -52,7 +52,6 @@ def xml_array_udtf(
     inner: Spec,
     strict_ns: bool = False,
     on_error: str = "fail",
-    use_arrow: bool = False,
 ):
     """Build (but do not register) the UDTF class for one array spec.
     Returns the callable UDTF; use :func:`register_xml_array_udtf` to make
@@ -66,14 +65,12 @@ def xml_array_udtf(
     richer PERMISSIVE triage mode; a UDTF has no corrupt-record column
     to fill, so skip is the honest lossy option).
 
-    ``use_arrow`` selects Spark 4's Arrow-optimized UDTF evaluation
-    (batched transfer; same values, same error contract — pinned by
-    tests/test_xml_spark.py::test_udtf_arrow_parity).  Default OFF: the
-    r9 A/B measured Arrow eval 5-12x SLOWER for these struct-row UDTFs
-    (xml_udtf_orders_struct 30.3s arrow vs 5.6s pickled at sf0.1; 41.5s
-    vs 3.4s at sf1 — per-row yield of small tuples defeats the batched
-    transfer, each arrow batch is built from Python objects anyway).
-    The flag stays for workloads that emit wide batches per input row."""
+    Evaluation is always pickled rows (``useArrow=False``): Spark 4's
+    Arrow-optimized UDTF evaluation measured 5-12x SLOWER for these
+    struct-row UDTFs (xml_udtf_orders_struct 30.3s arrow vs 5.6s pickled
+    at sf0.1; 41.5s vs 3.4s at sf1) — per-row yield of small tuples
+    defeats the batched transfer, each Arrow batch is built from Python
+    objects anyway."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"unknown on_error mode {on_error!r}")
     compiled: CompiledArraySpec = compile_array_spec(
@@ -101,14 +98,13 @@ def xml_array_udtf(
                 for rec in out:
                     yield tuple(rec.get(n) for n in field_names)
 
-    return udtf(XmlArrayUdtf, returnType=schema, useArrow=use_arrow)
+    return udtf(XmlArrayUdtf, returnType=schema, useArrow=False)
 
 
 def xml_struct_udtf(
     root: Struct,
     strict_ns: bool = False,
     on_error: str = "fail",
-    use_arrow: bool = False,
 ):
     """The ``ParserTool.CreateParser<T>`` twin (Parser.cs:335-339) as a SQL
     table function: ONE typed record per document, its struct fields spread
@@ -119,8 +115,8 @@ def xml_struct_udtf(
     representable without a null-struck row.
 
     ``on_error`` follows the array UDTF: ``"fail"`` is the reference's
-    FAILFAST contract, ``"skip"`` drops the document's record;
-    ``use_arrow`` as in :func:`xml_array_udtf`."""
+    FAILFAST contract, ``"skip"`` drops the document's record.
+    Evaluation is pickled rows, as in :func:`xml_array_udtf`."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"unknown on_error mode {on_error!r}")
     compiled: CompiledSpec = compile_spec(root, strict_ns=strict_ns)
@@ -141,7 +137,7 @@ def xml_struct_udtf(
                 return
             yield row
 
-    return udtf(XmlStructUdtf, returnType=schema, useArrow=use_arrow)
+    return udtf(XmlStructUdtf, returnType=schema, useArrow=False)
 
 
 def register_xml_struct_udtf(
@@ -150,13 +146,10 @@ def register_xml_struct_udtf(
     root: Struct,
     strict_ns: bool = False,
     on_error: str = "fail",
-    use_arrow: bool = False,
 ):
     """Register the struct-extraction table function under ``name`` for SQL
     use (``FROM t, LATERAL name(t.doc)``)."""
-    fn = xml_struct_udtf(
-        root, strict_ns=strict_ns, on_error=on_error, use_arrow=use_arrow
-    )
+    fn = xml_struct_udtf(root, strict_ns=strict_ns, on_error=on_error)
     spark.udtf.register(name, fn)
     return fn
 
@@ -168,17 +161,12 @@ def register_xml_array_udtf(
     inner: Spec,
     strict_ns: bool = False,
     on_error: str = "fail",
-    use_arrow: bool = False,
 ):
     """Register the array-extraction table function under ``name`` for SQL
     use (``FROM t, LATERAL name(t.doc)``).  Returns the UDTF so Python
     callers can also invoke it directly."""
     fn = xml_array_udtf(
-        container_pattern,
-        inner,
-        strict_ns=strict_ns,
-        on_error=on_error,
-        use_arrow=use_arrow,
+        container_pattern, inner, strict_ns=strict_ns, on_error=on_error
     )
     spark.udtf.register(name, fn)
     return fn
