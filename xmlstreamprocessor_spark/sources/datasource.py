@@ -9,9 +9,9 @@ This is the idiomatic Spark-4 packaging of the extraction kernel (SURVEY.md
          .option("path", "/data/xml")
          .load()
 
-scans XML files distributed — one input partition per file (the same
-parallel unit as ``read_xml``), bounded memory per task via iterparse, and
-the records shaped by the user schema (element text and attributes matched
+scans XML files distributed — one input partition per file (``read_xml``
+packs small files into fewer tasks), bounded memory per task via iterparse,
+and the records shaped by the user schema (element text and attributes matched
 by field name, attributes winning only when no element matches; wildcard /
 Tag() specs need the richer ``read_xml(spec=...)`` path).
 
@@ -41,6 +41,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from xmlstreamprocessor_spark.plans.spec import CompiledSpec, Struct, compile_spec
+from xmlstreamprocessor_spark.sources.xml_batch import _iter_rows, _worker_setup
 
 
 def spec_option(spec: Struct | CompiledSpec) -> str:
@@ -142,7 +143,14 @@ class XmlSourceReader(DataSourceReader):
                 self._eq_filters.setdefault(f.attribute[0], set()).update(f.value)
             yield f  # let Spark re-apply every filter post-scan
 
-    def partitions(self):  # one task per file — the read_xml parallel unit
+    def partitions(self):
+        # One input partition, so one Python task, per file: a file is the
+        # unit that pruning drops, whose path carries the hive partition
+        # values, and that the malformed-record resync re-scans.  Files are
+        # not packed together the way read_xml's binaryFile scan packs them
+        # (16 small files run as 16 tasks here, as about 4 there), so every
+        # file pays the fixed per-task cost.
+        #
         # consume-once: the reader instance is cached with the relation and
         # serves every scan of the DataFrame, but pushFilters only runs for
         # scans that HAVE filters — a later unfiltered scan calls
@@ -227,8 +235,7 @@ class XmlSourceReader(DataSourceReader):
         return fixes
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        from xmlstreamprocessor_spark.sources.xml_batch import _iter_rows
-
+        _worker_setup()
         if self.spec_bytes is not None:
             compiled = pickle.loads(self.spec_bytes)
         else:
@@ -800,6 +807,7 @@ class XmlBatchWriter(_XmlWriterBase, DataSourceArrowWriter):
         self.overwrite = overwrite
 
     def write(self, iterator) -> _XmlCommit:
+        _worker_setup()
         return self._write_partition(
             d for batch in iterator for d in batch.to_pylist()
         )
@@ -832,6 +840,7 @@ class XmlStreamWriter(_XmlWriterBase, DataSourceStreamWriter):
     a replayed batch (same epoch after recovery) just re-stages."""
 
     def write(self, iterator) -> _XmlCommit:
+        _worker_setup()
         return self._write_partition(
             r.asDict(recursive=True) for r in iterator
         )
