@@ -129,8 +129,8 @@ def test_coalesce_alternative_tags(tag, v):
 # ---------------------------------------------------------------------------
 # xspxml writer -> reader kernel round-trip (r10): the task-side halves of
 # the registered DataSource, driven directly (no Spark session) — random
-# typed records must survive serialize -> parse on BOTH reader hand-off
-# paths (per-record tuples and Arrow RecordBatches), value-identically.
+# typed records must survive serialize -> parse -> Arrow RecordBatches
+# value-identically, in one batch and split over several.
 # ---------------------------------------------------------------------------
 
 import datetime as _dt
@@ -152,15 +152,10 @@ def _xs_schema():
     )
 
 
-def _ds_reader(path: str, arrow_batch: int):
+def _ds_reader(path: str):
     from xmlstreamprocessor_spark.sources.datasource import XmlSourceReader
 
-    schema = _xs_schema()
-    r = XmlSourceReader(
-        schema,
-        {"path": path, "rowTag": "rec", "arrowBatchSize": str(arrow_batch)},
-    )
-    return r, schema
+    return XmlSourceReader(_xs_schema(), {"path": path, "rowTag": "rec"})
 
 
 # \r deliberately INCLUDED (unlike the hand-rolled _text serializer above):
@@ -200,7 +195,9 @@ _xs_record = st.fixed_dictionaries(
 @given(st.lists(_xs_record, min_size=1, max_size=12))
 def test_xspxml_kernel_roundtrip_property(tmp_path_factory, batch):
     import os
+    from unittest import mock
 
+    from xmlstreamprocessor_spark.sources import datasource
     from xmlstreamprocessor_spark.sources.datasource import (
         _FilePartition,
         write_rows_xml,
@@ -215,11 +212,10 @@ def test_xspxml_kernel_roundtrip_property(tmp_path_factory, batch):
 
     def norm(rows):
         # the reader yields SESSION-ZONE-aware timestamps by contract
-        # (default UTC — the fix for the tuple-vs-arrow naive-datetime
-        # divergence); normalize both paths to naive UTC wall time for
-        # the value compare.  The input datetimes were naive and the
-        # writer serialized their wall clock, so equal wall time IS
-        # round-trip equality.
+        # (default UTC, whatever the OS zone); normalize to naive UTC
+        # wall time for the value compare.  The input datetimes were
+        # naive and the writer serialized their wall clock, so equal wall
+        # time IS round-trip equality.
         import zoneinfo
 
         utc = zoneinfo.ZoneInfo("UTC")
@@ -233,14 +229,18 @@ def test_xspxml_kernel_roundtrip_property(tmp_path_factory, batch):
             for row in rows
         ]
 
-    reader, _ = _ds_reader(str(base), 0)
-    got_tuples = norm(list(reader.read(_FilePartition(path))))
-    assert got_tuples == want
+    def read():
+        batches = list(_ds_reader(str(base)).read(_FilePartition(path)))
+        rows = norm(
+            tuple(d[n] for n in names) for rb in batches for d in rb.to_pylist()
+        )
+        return rows, [rb.num_rows for rb in batches]
 
-    reader_b, _ = _ds_reader(str(base), 4)
-    got_batches = norm(
-        tuple(d[n] for n in names)
-        for rb in reader_b.read(_FilePartition(path))
-        for d in rb.to_pylist()
-    )
-    assert got_batches == want
+    got, sizes = read()
+    assert got == want and sizes == [len(want)]
+
+    # several batches per file: the same rows, split at the batch size
+    with mock.patch.object(datasource, "ARROW_BATCH_ROWS", 4):
+        got, sizes = read()
+    assert got == want
+    assert sizes == [len(want[i : i + 4]) for i in range(0, len(want), 4)]

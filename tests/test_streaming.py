@@ -465,14 +465,15 @@ def test_xspxml_stream_resume_reads_only_new_files(spark, tmp_path):
             .start()
         )
         q.awaitTermination(120)
-        return sorted(r["id"] for r in spark.read.parquet(out).collect())
+        arrived = sum(p["numInputRows"] for p in q.recentProgress)
+        return arrived, sorted(r["id"] for r in spark.read.parquet(out).collect())
 
     write_doc("a.xml", [1, 2, 3])
-    assert drain() == [1, 2, 3]
+    assert drain() == (3, [1, 2, 3])
     write_doc("b.xml", [4, 5])
-    # restart on the same checkpoint: b.xml appended exactly once, a.xml
-    # NOT re-ingested (no duplicates of 1/2/3)
-    assert drain() == [1, 2, 3, 4, 5]
+    # restart on the same checkpoint: only b.xml's 2 rows arrive, appended
+    # exactly once; a.xml is NOT re-ingested (no duplicates of 1/2/3)
+    assert drain() == (2, [1, 2, 3, 4, 5])
 
 
 def test_stream_kafka_contract_with_file_backed_double(spark, tmp_path):

@@ -141,9 +141,10 @@ def test_source_reader_installs_guard(unguarded, tmp_path):
     path.write_bytes(_DOC)
     reader = XmlSourceReader(
         T.StructType([T.StructField("n", T.IntegerType())]),
-        {"path": str(path), "rowTag": "rec", "arrowBatchSize": "0"},
+        {"path": str(path), "rowTag": "rec"},
     )
-    assert list(reader.read(_FilePartition(str(path)))) == [(1,), (2,)]
+    [batch] = list(reader.read(_FilePartition(str(path))))
+    assert batch.to_pydict() == {"n": [1, 2]}
     assert _guarded()
 
 

@@ -907,7 +907,7 @@ def test_scan_row_tag_offsets_chunked_and_span_aware(tmp_path):
     that split a row-tag token or a comment delimiter — and (b) skip
     row-tag tokens inside <!--...--> and <![CDATA[...]]> spans, which a
     raw whole-file regex would treat as false resync points."""
-    from xmlstreamprocessor_spark.sources.datasource import _scan_row_tag_offsets
+    from xmlstreamprocessor_spark.sources.xml_batch import _scan_row_tag_offsets
 
     body = (
         b"<root>"
@@ -927,9 +927,52 @@ def test_scan_row_tag_offsets_chunked_and_span_aware(tmp_path):
         body.index(b"<ns:r"),
         body.index(b"<r/>"),
     ]
-    assert _scan_row_tag_offsets(str(p), "r") == want
-    for chunk in (1, 3, 7, 130, 1 << 20):
-        assert _scan_row_tag_offsets(str(p), "r", chunk_size=chunk) == want
+    with open(p, "rb") as fh:
+        assert _scan_row_tag_offsets(fh, "r") == want
+        for chunk in (1, 3, 7, 130, 1 << 20):
+            assert _scan_row_tag_offsets(fh, "r", chunk_size=chunk) == want
+
+
+def test_namespaced_file_resyncs_on_read_xml_and_xspxml(spark, tmp_path):
+    """A malformed record in a file whose row tags carry a namespace
+    prefix: the resync parses each record slice behind the root start tag,
+    so the prefix stays bound, and both read_xml and xspxml keep the
+    records after the bad one and triage it exactly once."""
+    from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+
+    register_xml_source(spark)
+    d = tmp_path / "docs"
+    d.mkdir()
+    (d / "ns.xml").write_text(
+        '<root xmlns:p="urn:x">'
+        "<p:r><id>1</id></p:r>"
+        "<p:r><id>2</id"  # truncated: malformed mid-file
+        "<p:r><id>3</id></p:r>"
+        "<p:r><id>4</id></p:r>"
+        "</root>"
+    )
+    spec = X.struct("r", {"id": X.nint("id")})
+
+    def read_xml_rows(mode):
+        return read_xml(spark, str(d), "r", spec, mode=mode).collect()
+
+    def xspxml_rows(mode):
+        return (
+            spark.read.format("xspxml")
+            .schema("id int, _corrupt_file string")
+            .option("rowTag", "r")
+            .option("mode", mode)
+            .load(str(d))
+            .collect()
+        )
+
+    for load in (read_xml_rows, xspxml_rows):
+        assert sorted(r["id"] for r in load("DROPMALFORMED")) == [1, 3, 4]
+        perm = load("PERMISSIVE")
+        assert sorted(r["id"] for r in perm if r["_corrupt_file"] is None) == [1, 3, 4]
+        triage = [r for r in perm if r["_corrupt_file"] is not None]
+        assert len(triage) == 1 and triage[0]["id"] is None
+        assert triage[0]["_corrupt_file"].endswith("ns.xml")
 
 
 def test_udtf_array_extraction_matches_kernel(spark):
@@ -1440,11 +1483,9 @@ def test_xspxml_writer_edge_values_roundtrip(spark, tmp_path):
 
 def test_xspxml_timestamp_paths_agree(spark, tmp_path):
     """Offset-less timestamp text is interpreted in the source's fixed
-    sessionTz (default UTC) on BOTH hand-off paths.  Before the r10 fix
-    the tuple path went through OS-local time.mktime while the arrow path
-    read naive datetimes as UTC — the same file produced instants shifted
-    by the OS offset depending on arrowBatchSize (measured under
-    TZ=America/New_York: 05:00 vs 00:00)."""
+    sessionTz (default UTC), never in the worker's OS zone, on the one
+    Arrow hand-off path, in every mode (the PERMISSIVE rows pass through
+    the per-row fixes instead of the per-batch ones)."""
     from pyspark.sql import functions as F
 
     from xmlstreamprocessor_spark.sources.datasource import register_xml_source
@@ -1454,15 +1495,15 @@ def test_xspxml_timestamp_paths_agree(spark, tmp_path):
         "<rows><row><id>1</id><ts>1996-01-02T00:00:00</ts></row></rows>\n"
     )
     got = {}
-    for ab in ("0", "4096"):
+    for mode in ("FAILFAST", "PERMISSIVE"):
         r = (
             spark.read.format("xspxml")
             .schema("id bigint, ts timestamp")
             .option("rowTag", "row")
-            .option("arrowBatchSize", ab)
+            .option("mode", mode)
             .load(str(tmp_path))
         )
-        got[ab] = r.select(
+        got[mode] = r.select(
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
         ).collect()[0][0]
-    assert got["0"] == got["4096"] == "1996-01-02 00:00:00"
+    assert got["FAILFAST"] == got["PERMISSIVE"] == "1996-01-02 00:00:00"

@@ -4,8 +4,9 @@
 Round 6 ended with a snapshot commit that broke 52 tests because a
 half-finished ``plans/spec.py`` refactor shipped untested.  This guard runs
 the cheap, Spark-free portions of the suite — the golden Test1.cs ports, the
-pure-Python property round-trips, the generated-kernel differential test and
-the worker-setup guard tests — plus an import smoke of every package module,
+pure-Python property round-trips, the generated-kernel differential test,
+the worker-setup guard tests and the cross-surface malformed-input test —
+plus an import smoke of every package module,
 so a red kernel can never ship silently again (r6 verdict task #7).
 
 Wire-up: ``.git/hooks/pre-commit`` calls this script; it must exit 0 for the
@@ -29,6 +30,7 @@ FAST_TESTS = [
     "tests/test_property_roundtrip.py",
     "tests/test_kernel_differential.py",
     "tests/test_worker_setup.py",
+    "tests/test_malformed_input.py",
 ]
 
 

@@ -13,7 +13,12 @@ scans XML files distributed — one input partition per file (``read_xml``
 packs small files into fewer tasks), bounded memory per task via iterparse,
 and the records shaped by the user schema (element text and attributes matched
 by field name, attributes winning only when no element matches; wildcard /
-Tag() specs need the richer ``read_xml(spec=...)`` path).
+Tag() specs need the richer ``read_xml(spec=...)`` path).  Each task reads
+its file with ``read_xml``'s own loop (``xml_batch._file_rows``), so the two
+return the same rows under every ``mode``, and hands Spark Arrow record
+batches of ``ARROW_BATCH_ROWS`` records.  ``readStream.format("xspxml")``
+plans one partition per newly listed file and reads it on the executors
+the same way.
 
 A spec-aware variant rides the same source: ``option("specPickle", ...)``
 (produced by ``spec_option``) carries a pickled compiled spec so the full
@@ -33,15 +38,19 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
 from xmlstreamprocessor_spark.plans.spec import CompiledSpec, Struct, compile_spec
-from xmlstreamprocessor_spark.sources.xml_batch import _iter_rows, _worker_setup
+from xmlstreamprocessor_spark.sources.xml_batch import _file_rows, _worker_setup
+
+# records per Arrow RecordBatch a read hands Spark: one columnar
+# conversion per batch instead of a pickled tuple per record
+ARROW_BATCH_ROWS = 4096
 
 
 def spec_option(spec: Struct | CompiledSpec) -> str:
@@ -72,8 +81,8 @@ class XmlDataSource(DataSource):
     def reader(self, schema: StructType) -> "XmlSourceReader":
         return XmlSourceReader(schema, self.options)
 
-    def simpleStreamReader(self, schema: StructType) -> "XmlSimpleStreamReader":
-        return XmlSimpleStreamReader(schema, self.options)
+    def streamReader(self, schema: StructType) -> "XmlStreamReader":
+        return XmlStreamReader(schema, self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> "XmlBatchWriter":
         return XmlBatchWriter(schema, self.options, overwrite)
@@ -102,21 +111,12 @@ class XmlSourceReader(DataSourceReader):
         self.mode = str(options.get("mode", "FAILFAST")).upper()
         if self.mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
             raise ValueError(f"unknown mode {self.mode!r}")
-        # FAILFAST reads hand Spark Arrow RecordBatches of this many
-        # records instead of per-record tuples (0 = tuple path).  See
-        # read() for the measured rationale and the non-FAILFAST carve-out.
-        self.arrow_batch = int(options.get("arrowBatchSize", "4096"))
         # Offset-less timestamp text is interpreted in ONE fixed zone —
         # option("sessionTz", ...), default UTC (this engine pins
         # spark.sql.session.timeZone to UTC, see session.py) — and read()
         # localizes every parsed timestamp to it, yielding AWARE
-        # datetimes.  Without this the two hand-off paths DISAGREE on any
-        # box whose OS zone is not UTC: Spark converts a naive datetime
-        # yielded as a tuple via OS-local time.mktime, while pyarrow
-        # treats a naive datetime under a tz=UTC field as UTC wall time
-        # (measured: the literal text 1996-01-02T00:00:00 read back as
-        # 05:00 on the tuple path vs 00:00 on the arrow path under
-        # TZ=America/New_York).  An explicit option rather than sniffing
+        # datetimes, so the instant never depends on the worker's OS
+        # zone.  An explicit option rather than sniffing
         # SparkSession.getActiveSession(): the reader may be constructed
         # in Spark's python planner worker where no session is active
         # (measured: a post-registration session-zone change did not
@@ -215,9 +215,8 @@ class XmlSourceReader(DataSourceReader):
         strings (reference rule: attributes are untyped, Parser.cs:417) and
         are coerced to the declared type.  Timestamps are localized to the
         session zone (see __init__): naive datetimes become aware, so
-        Spark's tuple conversion (dt.timestamp()) and pyarrow's batch
-        conversion agree on the instant regardless of the worker's OS
-        zone."""
+        pyarrow's conversion gives the same instant whatever the worker's
+        OS zone."""
         from zoneinfo import ZoneInfo
 
         pvals = self._partition_values(fpath)
@@ -234,7 +233,16 @@ class XmlSourceReader(DataSourceReader):
                 fixes.append((i, fn))
         return fixes
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator:
+        """One file as Arrow RecordBatches of ``ARROW_BATCH_ROWS`` records,
+        read by ``read_xml``'s loop (``_file_rows``) under this source's
+        ``mode``; a malformed record becomes one triage row (PERMISSIVE:
+        nulls, the file's path in a declared ``_corrupt_file``) or nothing
+        (DROPMALFORMED)."""
+        import pyarrow as pa
+
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         _worker_setup()
         if self.spec_bytes is not None:
             compiled = pickle.loads(self.spec_bytes)
@@ -244,186 +252,42 @@ class XmlSourceReader(DataSourceReader):
         out_names = [f.name for f in self.schema.fields]
         assert names == out_names, (names, out_names)
         fixes = self._column_fixes(partition.path, coerce=self.spec_bytes is None)
-
-        def fix(row: tuple) -> tuple:
-            if not fixes:
-                return row
-            row = list(row)
-            for i, fn in fixes:
-                row[i] = fn(row[i])
-            return tuple(row)
-
-        def rows(fh):
-            for row in _iter_rows(fh, self.row_tag, compiled):
-                yield fix(row)
-
-        def triage_row():
-            return tuple(
-                partition.path if n == "_corrupt_file" else None for n in names
-            )
-
+        pa_schema = to_arrow_schema(self.schema)
         with open(partition.path, "rb") as fh:
-            if self.mode == "FAILFAST":
-                # Hand Spark Arrow RecordBatches instead of per-record
-                # tuples.  Honest A/B at sf0.1 (150k orders rows, warm
-                # pool, alternating runs): tuple path [1.53, 2.26, 1.05]s
-                # vs batched [1.31, 1.43, 1.30]s — a slight win with much
-                # flatter variance, value-identical aggregates (sums over
-                # every column type incl. decimal/timestamp).  Re-measured
-                # r11 after the from_arrays rewrite below: tuple median
-                # 0.85 s vs batched 0.79 s — still a modest, flat win.  Kept
-                # because the per-record pickle hand-off is the part that
-                # grows with records-per-task, while the batch build is
-                # one columnar conversion per 4096 records.  Only the
-                # FAILFAST path batches — one iterator cannot mix tuples
-                # and batches, and the PERMISSIVE/DROPMALFORMED recovery
-                # below yields per-record tuples by construction (its
-                # cost is the rescan, not the hand-off).
-                if self.arrow_batch > 0 and names:
-                    import pyarrow as pa
+            rows = _file_rows(fh, self.row_tag, compiled, self.mode)
+            if self.mode != "FAILFAST":
+                # a row whose column fix fails is malformed too, so the
+                # fixes run per row here, where a failure can be triaged
+                rows, fixes = self._settled(rows, fixes, partition.path), []
+            while batch := list(itertools.islice(rows, ARROW_BATCH_ROWS)):
+                cols = [list(c) for c in zip(*batch)]
+                for i, fn in fixes:
+                    cols[i] = [fn(v) for v in cols[i]]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
+                    schema=pa_schema,
+                )
 
-                    from pyspark.sql.pandas.types import to_arrow_schema
-
-                    pa_schema = to_arrow_schema(self.schema)
-                    rows_in = _iter_rows(fh, self.row_tag, compiled)
-                    while True:
-                        batch = list(itertools.islice(rows_in, self.arrow_batch))
-                        if not batch:
-                            return
-                        cols = [list(c) for c in zip(*batch)]
-                        for i, fn in fixes:
-                            cols[i] = [fn(v) for v in cols[i]]
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
-                            schema=pa_schema,
-                        )
-                yield from rows(fh)
-                return
-            # non-FAILFAST: stream optimistically (zero overhead while the
-            # file is well-formed).  On the first parse/cast error, switch
-            # to record-resync recovery below instead of abandoning the
-            # rest of the file.
-            n_ok = 0
-            it = rows(fh)
-            while True:
+    def _settled(self, rows, fixes, path: str) -> Iterator[tuple]:
+        """PERMISSIVE/DROPMALFORMED rows with the column fixes applied:
+        each malformed-record marker, or row whose fix raises, becomes one
+        triage row (PERMISSIVE) or nothing (DROPMALFORMED)."""
+        triage = tuple(
+            path if n == "_corrupt_file" else None for n in self.schema.names
+        )
+        for row in rows:
+            if row is not None:
                 try:
-                    rec = next(it)
-                except StopIteration:
-                    return
-                except Exception:  # noqa: BLE001 — malformed XML / bad cast
-                    break
-                n_ok += 1
-                yield rec
-        # Recovery pass (Spark XML reader parity: drop ONLY the malformed
-        # record, keep reading).  A broken expat stream cannot be resumed,
-        # so re-scan the raw bytes for row-tag start offsets and parse each
-        # [start_i, start_{i+1}) slice as a standalone document; slices that
-        # fail are dropped (DROPMALFORMED) or emitted as one triage row each
-        # (PERMISSIVE: nulls + `_corrupt_file` if declared).  The first
-        # ``n_ok`` recovered records were already emitted by the streaming
-        # pass and are skipped.  The offset scan is CHUNKED (O(1 MiB)
-        # memory, preserving the bounded-memory iterparse design on large
-        # corrupt files) and skips `<!--...-->` / `<![CDATA[...]]>` spans,
-        # so row-tag tokens inside comments or CDATA are not false resync
-        # points; per-record slices are then seek-read individually, so
-        # peak memory is the largest single record, never the file.
-        import io
-        import os as _os
-
-        starts = _scan_row_tag_offsets(partition.path, self.row_tag)
-        size = _os.path.getsize(partition.path)
-        ok = 0
-        with open(partition.path, "rb") as fh:
-            for i, off in enumerate(starts):
-                end = starts[i + 1] if i + 1 < len(starts) else size
-                fh.seek(off)
-                chunk = fh.read(end - off)
-                it = _iter_rows(io.BytesIO(chunk), self.row_tag, compiled)
-                try:
-                    rec = next(it)
-                except Exception:  # noqa: BLE001 — incl. StopIteration: no record
-                    if self.mode == "PERMISSIVE" and ok >= n_ok:
-                        yield triage_row()
+                    fixed = list(row)
+                    for i, fn in fixes:
+                        fixed[i] = fn(fixed[i])
+                except Exception:  # noqa: BLE001 — a failing coercion
+                    pass
+                else:
+                    yield tuple(fixed)
                     continue
-                ok += 1
-                if ok <= n_ok:
-                    continue  # already emitted before the error
-                try:
-                    yield fix(rec)
-                except Exception:  # noqa: BLE001 — bad cast in recovery
-                    if self.mode == "PERMISSIVE":
-                        yield triage_row()
-
-
-def _scan_row_tag_offsets(
-    path: str, row_tag: str, chunk_size: int = 1 << 20
-) -> list[int]:
-    """Absolute byte offsets of row-tag start tokens, found with a CHUNKED
-    scan (memory is O(chunk_size), never O(file)) that tracks
-    ``<!--...-->`` and ``<![CDATA[...]]>`` spans across chunk boundaries so
-    tokens inside them are not reported — those are exactly the false
-    resync points a raw regex over the whole file would hit.
-
-    Decisions are only made up to ``len(buf) - overlap`` until EOF, so a
-    token or row-tag match straddling a chunk boundary is always seen whole
-    on the next pass (overlap bounds the namespace-prefix length, as any
-    scanner without unbounded lookbehind must)."""
-    import re as _re
-
-    pat = _re.compile(
-        rb"<(?:[A-Za-z_][\w.-]*:)?" + _re.escape(row_tag.encode()) + rb"[\s/>]"
-    )
-    overlap = max(len(row_tag.encode()) + 96, 128)
-    offsets: list[int] = []
-    buf = b""
-    base = 0  # absolute file offset of buf[0]
-    state = 0  # 0 = markup, 1 = inside comment, 2 = inside CDATA
-    with open(path, "rb") as fh:
-        eof = False
-        while not (eof and not buf):
-            if not eof:
-                block = fh.read(chunk_size)
-                if block:
-                    buf += block
-                else:
-                    eof = True
-            limit = len(buf) if eof else max(0, len(buf) - overlap)
-            p = 0
-            while p < limit:
-                if state == 1:  # scan for comment close
-                    q = buf.find(b"-->", p)
-                    if q == -1 or q >= limit:
-                        p = limit
-                    else:
-                        state, p = 0, q + 3
-                elif state == 2:  # scan for CDATA close
-                    q = buf.find(b"]]>", p)
-                    if q == -1 or q >= limit:
-                        p = limit
-                    else:
-                        state, p = 0, q + 3
-                else:
-                    c = buf.find(b"<!--", p)
-                    d = buf.find(b"<![CDATA[", p)
-                    m = pat.search(buf, p)
-                    nxt = min(
-                        (x for x in (c, d, m.start() if m else -1) if x != -1),
-                        default=-1,
-                    )
-                    if nxt == -1 or nxt >= limit:
-                        p = limit
-                    elif nxt == c:
-                        state, p = 1, c + 4
-                    elif nxt == d:
-                        state, p = 2, d + 9
-                    else:
-                        offsets.append(base + nxt)
-                        p = nxt + 1
-            buf = buf[limit:]
-            base += limit
-            if eof and limit == 0:
-                break
-    return offsets
+            if self.mode == "PERMISSIVE":
+                yield triage
 
 
 def _constant(value):
@@ -512,24 +376,21 @@ def register_xml_source(spark) -> None:
     spark.dataSource.register(XmlDataSource)
 
 
-class XmlSimpleStreamReader(SimpleDataSourceStreamReader):
+class XmlStreamReader(DataSourceStreamReader):
     """Streaming half of the ``xspxml`` source: the offset is the set of
-    files already ingested (path -> size), so each micro-batch reads exactly
-    the files that appeared since the last one — the same exactly-once
-    file-discovery contract as Spark's built-in file stream source, with the
-    extraction kernel applied in place."""
+    files already listed (path -> size), and each micro-batch plans one
+    partition per file that appeared since the last one — the same
+    exactly-once file-discovery contract as Spark's built-in file stream
+    source.  The driver only lists files; the partitions are read on the
+    executors by ``XmlSourceReader.read``, as in a batch scan."""
 
     def __init__(self, schema: StructType, options: dict):
         self._reader = XmlSourceReader(schema, options)
-        # the simple stream reader's (rows, offset) contract wants plain
-        # tuples (the engine deep-copies and pickles them per batch) —
-        # force the tuple path regardless of the batch option
-        self._reader.arrow_batch = 0
 
     def initialOffset(self) -> dict:
         return {"files": {}}
 
-    def _list(self) -> dict:
+    def latestOffset(self) -> dict:
         import os
 
         out = {}
@@ -538,25 +399,14 @@ class XmlSimpleStreamReader(SimpleDataSourceStreamReader):
                 out[p.path] = os.path.getsize(p.path)
             except OSError:
                 continue
-        return out
+        return {"files": out}
 
-    def read(self, start: dict):
+    def partitions(self, start: dict, end: dict) -> list[_FilePartition]:
         seen = start.get("files", {})
-        now = self._list()
-        new_files = [p for p in sorted(now) if p not in seen]
-        # materialized list, not a generator: the engine deep-copies the
-        # (rows, offset) pair when prefetching
-        rows = [
-            r for path in new_files for r in self._reader.read(_FilePartition(path))
-        ]
-        return rows, {"files": now}
+        return [_FilePartition(p) for p in sorted(end["files"]) if p not in seen]
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        seen = start.get("files", {})
-        target = end.get("files", {})
-        for path in sorted(target):
-            if path not in seen:
-                yield from self._reader.read(_FilePartition(path))
+    def read(self, partition: _FilePartition) -> Iterator:
+        return self._reader.read(partition)
 
     def commit(self, end: dict) -> None:
         pass

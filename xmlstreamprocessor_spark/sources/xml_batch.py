@@ -18,7 +18,9 @@ the same bounded-memory contract *per task* but scales out:
 
 Every surface drives one record loop, ``_iter_rows``, which yields the
 generated row function's tuples; output frames are built column-wise from
-those tuples, with no per-record dict.
+those tuples, with no per-record dict.  Every file surface (``read_xml``,
+``stream_xml`` and the ``xspxml`` source) reads a file through
+``_file_rows``, so all of them share one malformed-input policy.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import gc
 import io
 import itertools
 import os
+import re
 import sys
 import xml.etree.ElementTree as ET
 import zipimport
@@ -164,6 +167,129 @@ def _iter_rows(source, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple]:
         elem.clear()
 
 
+def _file_rows(
+    fh, row_tag: str, compiled: CompiledSpec, mode: str
+) -> Iterator[tuple | None]:
+    """Every file surface's record loop over one seekable binary file.
+
+    FAILFAST is ``_iter_rows`` itself: the first parse or cast error
+    propagates.  PERMISSIVE and DROPMALFORMED stream the same way until
+    the first error, then resync per record: the file is re-scanned for
+    row-tag start offsets (spark-xml's ``XmlInputFormat`` rule, a record
+    starts at a row-tag token) and each ``[start_i, start_{i+1})`` slice is
+    parsed on its own, behind the bytes before the first record (prolog,
+    root start tag), so the declared encoding and the root's namespace
+    bindings apply to every slice.  The records streamed before the error
+    are not repeated; each malformed record after them yields one
+    ``None`` marker, which the caller turns into a triage row or drops.
+    An error that no record slice reproduces (a broken tail after the
+    last record, say) still yields one marker, so a malformed file is
+    never passed off as clean.  Memory stays O(record): slices are
+    seek-read one at a time."""
+    if mode == "FAILFAST":
+        return _iter_rows(fh, row_tag, compiled)
+    return _resynced_rows(fh, row_tag, compiled)
+
+
+def _resynced_rows(fh, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple | None]:
+    n_ok = 0
+    try:
+        for row in _iter_rows(fh, row_tag, compiled):
+            n_ok += 1
+            yield row
+        return
+    except Exception:  # noqa: BLE001 — malformed XML or a failing cast
+        pass
+    starts = _scan_row_tag_offsets(fh, row_tag)
+    size = fh.seek(0, io.SEEK_END)
+    fh.seek(0)
+    head = fh.read(starts[0]) if starts else b""
+    ok = marked = 0
+    for off, end in zip(starts, starts[1:] + [size]):
+        fh.seek(off)
+        body = fh.read(end - off)
+        try:
+            row = next(_iter_rows(io.BytesIO(head + body), row_tag, compiled))
+        except Exception:  # noqa: BLE001 — StopIteration too: no record
+            if ok >= n_ok:
+                marked += 1
+                yield None
+            continue
+        ok += 1
+        if ok > n_ok:
+            yield row
+    if not marked:
+        yield None
+
+
+def _scan_row_tag_offsets(fh, row_tag: str, chunk_size: int = 1 << 20) -> list[int]:
+    """Absolute byte offsets of row-tag start tokens in the binary file
+    ``fh`` (read from its start), found with a CHUNKED scan (memory is
+    O(chunk_size), never O(file)) that tracks ``<!--...-->`` and
+    ``<![CDATA[...]]>`` spans across chunk boundaries so tokens inside
+    them are not reported — those are exactly the false resync points a
+    raw regex over the whole file would hit.
+
+    Decisions are only made up to ``len(buf) - overlap`` until EOF, so a
+    token or row-tag match straddling a chunk boundary is always seen whole
+    on the next pass (overlap bounds the namespace-prefix length, as any
+    scanner without unbounded lookbehind must)."""
+    pat = re.compile(
+        rb"<(?:[A-Za-z_][\w.-]*:)?" + re.escape(row_tag.encode()) + rb"[\s/>]"
+    )
+    overlap = max(len(row_tag.encode()) + 96, 128)
+    offsets: list[int] = []
+    buf = b""
+    base = 0  # absolute file offset of buf[0]
+    state = 0  # 0 = markup, 1 = inside comment, 2 = inside CDATA
+    fh.seek(0)
+    eof = False
+    while not (eof and not buf):
+        if not eof:
+            block = fh.read(chunk_size)
+            if block:
+                buf += block
+            else:
+                eof = True
+        limit = len(buf) if eof else max(0, len(buf) - overlap)
+        p = 0
+        while p < limit:
+            if state == 1:  # scan for comment close
+                q = buf.find(b"-->", p)
+                if q == -1 or q >= limit:
+                    p = limit
+                else:
+                    state, p = 0, q + 3
+            elif state == 2:  # scan for CDATA close
+                q = buf.find(b"]]>", p)
+                if q == -1 or q >= limit:
+                    p = limit
+                else:
+                    state, p = 0, q + 3
+            else:
+                c = buf.find(b"<!--", p)
+                d = buf.find(b"<![CDATA[", p)
+                m = pat.search(buf, p)
+                nxt = min(
+                    (x for x in (c, d, m.start() if m else -1) if x != -1),
+                    default=-1,
+                )
+                if nxt == -1 or nxt >= limit:
+                    p = limit
+                elif nxt == c:
+                    state, p = 1, c + 4
+                elif nxt == d:
+                    state, p = 2, d + 9
+                else:
+                    offsets.append(base + nxt)
+                    p = nxt + 1
+        buf = buf[limit:]
+        base += limit
+        if eof and limit == 0:
+            break
+    return offsets
+
+
 def iterparse_records(source, row_tag: str, compiled: CompiledSpec) -> Iterator[dict]:
     """Stream record elements matching ``row_tag`` out of one XML source with
     bounded memory (iterparse + clear), emitting extracted dicts."""
@@ -202,15 +328,27 @@ def _file_frames(
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """The ``mapInPandas`` function shared by ``read_xml`` and
     ``stream_xml``: (path, content) file batches in, row frames of at most
-    ``batch_rows`` records out.  A malformed file fails the task
-    (FAILFAST), or keeps the records parsed before the failure point plus,
-    under PERMISSIVE, one all-null triage row naming the file."""
+    ``batch_rows`` records out, each file read by ``_file_rows``.  A
+    malformed record fails the task (FAILFAST), or is dropped
+    (DROPMALFORMED) or becomes one all-null triage row naming its file
+    (PERMISSIVE); the records after it are kept either way."""
     null_row = (None,) * len(compiled.names)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _worker_setup()
-        rows: list[tuple] = []
-        triage: list[tuple[int, str]] = []  # (row index, failing file)
+        rows: list[tuple | None] = []
+        triage: list[tuple[int, str]] = []  # (row index, malformed file)
+
+        def settle(n: int, fpath: str) -> None:
+            # rows[n:] came from fpath: markers become triage rows or go
+            new = rows[n:]
+            del rows[n:]
+            for r in new:
+                if r is not None:
+                    rows.append(r)
+                elif mode == "PERMISSIVE":
+                    triage.append((len(rows), fpath))
+                    rows.append(null_row)
 
         def flush() -> pd.DataFrame:
             pdf = _frame(compiled.schema, rows)
@@ -225,23 +363,18 @@ def _file_frames(
 
         for pdf in batches:
             for fpath, content in zip(pdf["path"], pdf["content"]):
-                it = _iter_rows(io.BytesIO(content), row_tag, compiled)
-                done = False
-                while not done:
-                    try:
-                        # extend() keeps the rows parsed before an error
-                        with _gc_deferred():
-                            rows.extend(itertools.islice(it, batch_rows - len(rows)))
-                        done = len(rows) < batch_rows  # file exhausted
-                    except Exception:
-                        if mode == "FAILFAST":
-                            raise
-                        done = True
-                        if mode == "PERMISSIVE":
-                            triage.append((len(rows), fpath))
-                            rows.append(null_row)
+                it = _file_rows(io.BytesIO(content), row_tag, compiled, mode)
+                while True:
+                    n = len(rows)
+                    with _gc_deferred():
+                        rows.extend(itertools.islice(it, batch_rows - n))
+                    exhausted = len(rows) < batch_rows
+                    if mode != "FAILFAST":
+                        settle(n, fpath)
                     if len(rows) >= batch_rows:
                         yield flush()
+                    if exhausted:
+                        break
         if rows:
             yield flush()
 
@@ -405,11 +538,13 @@ def read_xml(
     ``min_partitions`` repartitions the file list first.
 
     ``mode``: ``FAILFAST`` (default — a malformed file aborts the job, the
-    reference's semantics), ``PERMISSIVE`` (records parsed before the
-    failure point are kept — iterparse streams, so the prefix is already
-    valid — plus one null row whose ``corrupt_column`` holds the failing
-    file's path for triage), or ``DROPMALFORMED`` (salvage the prefix,
-    note nothing)."""
+    reference's semantics), ``PERMISSIVE`` (every well-formed record is
+    kept, before and after a bad one — the reader resyncs at the next
+    row-tag start — and each malformed record becomes one null row whose
+    ``corrupt_column`` holds the file's path for triage), or
+    ``DROPMALFORMED`` (the same records, malformed ones dropped).  The
+    ``xspxml`` source reads files through the same loop, so both return
+    the same rows."""
     if mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
         raise ValueError(f"unknown mode {mode!r}")
     compiled = _ensure_compiled(spec)
