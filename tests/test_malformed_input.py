@@ -24,6 +24,7 @@ from xmlstreamprocessor_spark.sources.datasource import (
     XmlSourceReader,
     XmlStreamReader,
     _FilePartition,
+    spec_option,
 )
 from xmlstreamprocessor_spark.sources.xml_batch import (
     _file_frames,
@@ -65,6 +66,41 @@ CORPUS = {
         1,
     ),
 }
+# file name -> (bytes, row tag, spec root, strict namespaces, ids of the
+# well-formed records, malformed records): the resync must find record
+# starts for any row tag the record loop matches
+TAGGED = {
+    # a wildcard row tag resyncs at every tag match_pattern accepts
+    "wildcard.xml": (
+        b"<root><t_a><id>1</id></t_a><t_b><id>2</id</t_b>"
+        b"<t_a><id>3</id></t_a><t_c><id>4</id></t_c></root>",
+        "t_*",
+        "t_*",
+        False,
+        [1, 3, 4],
+        1,
+    ),
+    # a strict Clark-notation row tag resyncs at its prefixed local name
+    "clark_strict.xml": (
+        b'<root xmlns:p="urn:x"><p:t><id>1</id></p:t><p:t><id>2</id</p:t>'
+        b"<p:t><id>3</id></p:t><p:t><id>4</id></p:t></root>",
+        "{urn:x}t",
+        "{urn:x}t",
+        True,
+        [1, 3, 4],
+        1,
+    ),
+    # well-formed records that the spec's root pattern skips are not
+    # malformed: one marker, for the one bad record
+    "skipped_root.xml": (
+        b"<root><t><id>1</id></t><t><id>2</id</t><t><id>3</id></t></root>",
+        "t",
+        "u",
+        False,
+        [],
+        1,
+    ),
+}
 MODES = ["DROPMALFORMED", "PERMISSIVE"]
 SPEC = compile_spec(X.struct("r", {"id": X.nint("id")}))
 SCHEMA = T.StructType(
@@ -72,9 +108,11 @@ SCHEMA = T.StructType(
 )
 
 
-def _frames_surface(name: str, body: bytes, mode: str) -> tuple[list, int]:
+def _frames_surface(
+    name: str, body: bytes, mode: str, row_tag: str = "r", spec=SPEC
+) -> tuple[list, int]:
     """(data ids, triage rows) through read_xml's partition function."""
-    run = _file_frames("r", SPEC, 2, mode)  # 2: frames split mid-file
+    run = _file_frames(row_tag, spec, 2, mode)  # 2: frames split mid-file
     files = pd.DataFrame({"path": [name], "content": [body]})
     ids, triage = [], 0
     for frame in run(iter([files])):
@@ -87,9 +125,17 @@ def _frames_surface(name: str, body: bytes, mode: str) -> tuple[list, int]:
     return ids, triage
 
 
-def _source_surface(path: str, mode: str) -> tuple[list, int]:
-    """(data ids, triage rows) through the xspxml reader."""
-    reader = XmlSourceReader(SCHEMA, {"path": path, "rowTag": "r", "mode": mode})
+def _source_surface(
+    path: str, mode: str, row_tag: str = "r", spec=None
+) -> tuple[list, int]:
+    """(data ids, triage rows) through the xspxml reader: on the schema
+    path, or on a compiled ``spec`` with a ``_corrupt_file`` field."""
+    options = {"path": path, "rowTag": row_tag, "mode": mode}
+    schema = SCHEMA
+    if spec is not None:
+        options["specPickle"] = spec_option(spec)
+        schema = spec.schema
+    reader = XmlSourceReader(schema, options)
     ids, triage = [], 0
     for batch in reader.read(_FilePartition(path)):
         for d in batch.to_pylist():
@@ -110,6 +156,22 @@ def test_file_surfaces_agree_on_malformed_input(tmp_path, name, mode):
     want = (want_ids, bad if mode == "PERMISSIVE" else 0)
     assert _frames_surface(name, body, mode) == want
     assert _source_surface(str(path), mode) == want
+
+
+@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("name", sorted(TAGGED))
+def test_resync_follows_the_row_tag_and_spec_root(tmp_path, name, mode):
+    body, row_tag, root, strict, want_ids, bad = TAGGED[name]
+    want = (want_ids, bad if mode == "PERMISSIVE" else 0)
+    spec = compile_spec(X.struct(root, {"id": X.nint("id")}), strict_ns=strict)
+    assert _frames_surface(name, body, mode, row_tag, spec) == want
+    with_triage = X.struct(
+        root, {"id": X.nint("id"), "_corrupt_file": X.string("_corrupt_file")}
+    )
+    path = tmp_path / name
+    path.write_bytes(body)
+    source_spec = compile_spec(with_triage, strict_ns=strict)
+    assert _source_surface(str(path), mode, row_tag, source_spec) == want
 
 
 @pytest.mark.parametrize("name", sorted(CORPUS))

@@ -1507,3 +1507,64 @@ def test_xspxml_timestamp_paths_agree(spark, tmp_path):
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
         ).collect()[0][0]
     assert got["FAILFAST"] == got["PERMISSIVE"] == "1996-01-02 00:00:00"
+
+
+# every Python worker of a get_session session forks from the engine's
+# daemon, which installs the zipimport guard before forking
+
+
+def test_worker_daemon_guards_plain_python_functions(spark):
+    """A ``mapInPandas`` function that never touches the engine runs in a
+    worker forked from ``get_session``'s daemon, guard installed."""
+    from xmlstreamprocessor_spark.session import DAEMON_MODULE
+
+    assert spark.conf.get("spark.python.daemon.module") == DAEMON_MODULE
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        main = getattr(sys.modules["__main__"].__spec__, "name", None)
+        guarded = getattr(
+            zipimport.zipimporter.invalidate_caches, "_stamp_guarded", False
+        )
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"id": pdf["id"], "guarded": guarded, "daemon": main}
+            )
+
+    rows = (
+        spark.range(0, 8, numPartitions=4)
+        .mapInPandas(probe, "id long, guarded boolean, daemon string")
+        .collect()
+    )
+    assert sorted(r["id"] for r in rows) == list(range(8))
+    assert {(r["guarded"], r["daemon"]) for r in rows} == {(True, DAEMON_MODULE)}
+
+
+def test_read_xml_runs_guarded_in_the_worker(spark, tmp_path):
+    """``read_xml``'s partition function calls no setup of its own: a
+    custom field, evaluated by the kernel inside the worker, sees the
+    daemon's guard."""
+    from pyspark.sql import types as T
+
+    def guarded(_elem) -> bool:
+        import zipimport
+
+        return getattr(
+            zipimport.zipimporter.invalidate_caches, "_stamp_guarded", False
+        )
+
+    for i in range(2):
+        (tmp_path / f"f{i}.xml").write_text(
+            f"<docs><rec><n>{i}</n><g/></rec><rec><n>{i + 10}</n><g/></rec></docs>"
+        )
+    spec = X.struct(
+        "rec",
+        {"n": X.nint("n"), "guarded": X.custom("g", guarded, T.BooleanType())},
+    )
+    rows = read_xml(spark, str(tmp_path), "rec", spec).collect()
+    assert sorted(r["n"] for r in rows) == [0, 1, 10, 11]
+    assert {r["guarded"] for r in rows} == {True}

@@ -15,6 +15,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the Python worker daemon get_session starts (spark.python.daemon.module)
+DAEMON_MODULE = "xmlstreamprocessor_spark._daemon"
+
 
 def _default_driver_memory() -> str:
     """``min(16g, half of physical RAM)``, floored at 2g.
@@ -74,6 +77,10 @@ def get_session(
             os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
         )
         .config("spark.ui.enabled", "false")
+        # every Python worker forks from this daemon with the zipimport
+        # guard already installed (see _daemon.py); a static conf, so only
+        # the builder can set it
+        .config("spark.python.daemon.module", DAEMON_MODULE)
     )
     return builder.getOrCreate()
 
@@ -84,6 +91,11 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     The correctness driver builds its own SparkSession; queries route through
     this so results are deterministic and comparable with DuckDB regardless of
     who built the session.
+
+    ``spark.python.daemon.module`` (``get_session``'s worker daemon, see
+    ``_daemon.py``) is a static conf and cannot be set here.  A session
+    built elsewhere sets it on its own builder, or every Python task pays
+    the unguarded per-task ``zipimport`` refresh (about 260 ms of CPU).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -46,7 +46,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from xmlstreamprocessor_spark.plans.spec import CompiledSpec, Struct, compile_spec
-from xmlstreamprocessor_spark.sources.xml_batch import _file_rows, _worker_setup
+from xmlstreamprocessor_spark.sources.xml_batch import _file_rows
 
 # records per Arrow RecordBatch a read hands Spark: one columnar
 # conversion per batch instead of a pickled tuple per record
@@ -243,7 +243,6 @@ class XmlSourceReader(DataSourceReader):
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        _worker_setup()
         if self.spec_bytes is not None:
             compiled = pickle.loads(self.spec_bytes)
         else:
@@ -657,7 +656,6 @@ class XmlBatchWriter(_XmlWriterBase, DataSourceArrowWriter):
         self.overwrite = overwrite
 
     def write(self, iterator) -> _XmlCommit:
-        _worker_setup()
         return self._write_partition(
             d for batch in iterator for d in batch.to_pylist()
         )
@@ -690,7 +688,6 @@ class XmlStreamWriter(_XmlWriterBase, DataSourceStreamWriter):
     a replayed batch (same epoch after recovery) just re-stages."""
 
     def write(self, iterator) -> _XmlCommit:
-        _worker_setup()
         return self._write_partition(
             r.asDict(recursive=True) for r in iterator
         )

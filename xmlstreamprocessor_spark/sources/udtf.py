@@ -36,7 +36,6 @@ from xmlstreamprocessor_spark.plans.spec import (
     compile_array_spec,
     compile_spec,
 )
-from xmlstreamprocessor_spark.sources.xml_batch import _worker_setup
 
 
 def _row_schema(inner: Spec) -> tuple[T.StructType, list[str] | None]:
@@ -81,9 +80,6 @@ def xml_array_udtf(
     skip = on_error == "skip"
 
     class XmlArrayUdtf:
-        def __init__(self):
-            _worker_setup()
-
         def eval(self, xml: str):  # noqa: D102 — UDTF contract
             if xml is None:
                 return
@@ -128,9 +124,6 @@ def xml_struct_udtf(
     skip = on_error == "skip"
 
     class XmlStructUdtf:
-        def __init__(self):
-            _worker_setup()
-
         def eval(self, xml: str):  # noqa: D102 — UDTF contract
             if xml is None:
                 return

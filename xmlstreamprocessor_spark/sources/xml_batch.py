@@ -26,15 +26,12 @@ those tuples, with no per-record dict.  Every file surface (``read_xml``,
 from __future__ import annotations
 
 import contextlib
-import functools
 import gc
 import io
 import itertools
-import os
 import re
 import sys
 import xml.etree.ElementTree as ET
-import zipimport
 from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
@@ -74,51 +71,6 @@ def _gc_deferred() -> Iterator[None]:
         gc.enable()
 
 
-def _worker_setup() -> None:
-    """Once per Python worker, make ``zipimporter.invalidate_caches`` skip
-    archives that have not changed.
-
-    PySpark calls ``importlib.invalidate_caches()`` at the start of every
-    task, and the stdlib ``zipimporter`` answers by re-parsing its
-    archive's whole central directory, every time.  A worker's path holds
-    ``pyspark.zip`` (1328 entries), the spark-core jar (5359) and py4j's
-    zip, behind 16 cached importers, so each task paid about 200-300 ms of
-    CPU before the partition function ran (measured on CPython 3.11,
-    Spark 4.1, 4-vCPU VM).  The guarded method re-reads an archive only
-    when its ``(st_mtime_ns, st_size)`` differs from the stamp of the last
-    read, which importers of the same archive share.  A changed archive is
-    still re-read, so the stdlib contract holds; the stat is taken before
-    the read, so a write racing the read leaves a stale stamp and forces
-    one more read, never a missed one.  A failed read is not recorded, so
-    the next call tries again.  Idempotent; every worker entry point of
-    the XML engine calls it first.  The first task on a worker still pays
-    the full refresh, and the first guarded call reads each archive once."""
-    original = zipimport.zipimporter.invalidate_caches
-    if getattr(original, "_stamp_guarded", False):
-        return
-    # archive path -> ((st_mtime_ns, st_size), directory) of the last read
-    reads: dict[str, tuple[tuple[int, int], dict]] = {}
-
-    @functools.wraps(original)
-    def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = None
-        hit = reads.get(self.archive)
-        if stamp is not None and hit is not None and hit[0] == stamp:
-            self._files = hit[1]
-            return
-        reads.pop(self.archive, None)
-        original(self)
-        if stamp is not None and self._files:
-            reads[self.archive] = (stamp, self._files)
-
-    invalidate_caches._stamp_guarded = True
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
-
-
 def extract_xml_records(xml_docs: Iterable[str], spec) -> list[dict]:
     """Local (single-process) extraction — the per-task kernel, exposed for
     tests and for parity with ``ParserTool.CreateParser`` usage."""
@@ -131,11 +83,19 @@ def extract_xml_records(xml_docs: Iterable[str], spec) -> list[dict]:
     return out
 
 
-def _iter_rows(source, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple]:
+# what _iter_rows(..., mark_skipped=True) yields for a record the spec's
+# root pattern skips
+_SKIPPED = object()
+
+
+def _iter_rows(
+    source, row_tag: str, compiled: CompiledSpec, mark_skipped: bool = False
+) -> Iterator[tuple]:
     """The record loop: stream the elements matching ``row_tag`` out of one
     XML source (end events only, ``clear()`` after each record) and yield
     the generated row function's tuple for each one whose tag
-    also matches the spec's root pattern.
+    also matches the spec's root pattern (``_SKIPPED`` for each one that
+    does not, when ``mark_skipped``).
 
     The namespace mode comes from ``compiled`` (fixed in its generated
     code), never from module state, so interleaved readers with different
@@ -164,6 +124,8 @@ def _iter_rows(source, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple]:
             continue
         if every or compiled.matches(t):
             yield row(elem)
+        elif mark_skipped:
+            yield _SKIPPED
         elem.clear()
 
 
@@ -182,6 +144,8 @@ def _file_rows(
     bindings apply to every slice.  The records streamed before the error
     are not repeated; each malformed record after them yields one
     ``None`` marker, which the caller turns into a triage row or drops.
+    A slice is judged by whether its record parsed, so a well-formed
+    record that the spec's root pattern skips is not malformed.
     An error that no record slice reproduces (a broken tail after the
     last record, say) still yields one marker, so a malformed file is
     never passed off as clean.  Memory stays O(record): slices are
@@ -192,11 +156,15 @@ def _file_rows(
 
 
 def _resynced_rows(fh, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple | None]:
+    # records are counted whether or not the spec's root pattern keeps
+    # them: a slice is good when its record parsed, and the first n_ok
+    # good slices were streamed before the error
     n_ok = 0
     try:
-        for row in _iter_rows(fh, row_tag, compiled):
+        for row in _iter_rows(fh, row_tag, compiled, mark_skipped=True):
             n_ok += 1
-            yield row
+            if row is not _SKIPPED:
+                yield row
         return
     except Exception:  # noqa: BLE001 — malformed XML or a failing cast
         pass
@@ -207,16 +175,16 @@ def _resynced_rows(fh, row_tag: str, compiled: CompiledSpec) -> Iterator[tuple |
     ok = marked = 0
     for off, end in zip(starts, starts[1:] + [size]):
         fh.seek(off)
-        body = fh.read(end - off)
+        slice_ = io.BytesIO(head + fh.read(end - off))
         try:
-            row = next(_iter_rows(io.BytesIO(head + body), row_tag, compiled))
+            row = next(_iter_rows(slice_, row_tag, compiled, mark_skipped=True))
         except Exception:  # noqa: BLE001 — StopIteration too: no record
             if ok >= n_ok:
                 marked += 1
                 yield None
             continue
         ok += 1
-        if ok > n_ok:
+        if ok > n_ok and row is not _SKIPPED:
             yield row
     if not marked:
         yield None
@@ -233,10 +201,24 @@ def _scan_row_tag_offsets(fh, row_tag: str, chunk_size: int = 1 << 20) -> list[i
     Decisions are only made up to ``len(buf) - overlap`` until EOF, so a
     token or row-tag match straddling a chunk boundary is always seen whole
     on the next pass (overlap bounds the namespace-prefix length, as any
-    scanner without unbounded lookbehind must)."""
-    pat = re.compile(
-        rb"<(?:[A-Za-z_][\w.-]*:)?" + re.escape(row_tag.encode()) + rb"[\s/>]"
-    )
+    scanner without unbounded lookbehind must).
+
+    The token is matched on the row tag's local name, under any prefix:
+    raw bytes carry prefixes, not the URI of a Clark-notation
+    ``{uri}name`` tag, and a wildcard ``pre*post`` matches as
+    ``match_pattern`` does.  The parse of each slice decides the rest."""
+    local = row_tag.rsplit("}", 1)[-1]
+    if "*" in local:
+        pre, _, post = local.partition("*")
+        name = (
+            rb"(?=[A-Za-z_])"
+            + re.escape(pre.encode())
+            + rb"[\w.-]*"
+            + re.escape(post.encode())
+        )
+    else:
+        name = re.escape(local.encode())
+    pat = re.compile(rb"<(?:[A-Za-z_][\w.-]*:)?" + name + rb"[\s/>]")
     overlap = max(len(row_tag.encode()) + 96, 128)
     offsets: list[int] = []
     buf = b""
@@ -335,7 +317,6 @@ def _file_frames(
     null_row = (None,) * len(compiled.names)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _worker_setup()
         rows: list[tuple | None] = []
         triage: list[tuple[int, str]] = []  # (row index, malformed file)
 
@@ -495,7 +476,6 @@ def extract_xml(
     null_row = (None,) * len(schema.fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _worker_setup()
         for pdf in batches:
             rows: list[tuple] = []
             corrupt: list[str | None] = []
