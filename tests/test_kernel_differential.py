@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import decimal
 import io
+import sys
 import xml.etree.ElementTree as ET
 
 from hypothesis import HealthCheck, given, settings
@@ -30,7 +31,7 @@ from xmlstreamprocessor_spark.plans.spec import (
     compile_spec,
     match_pattern,
 )
-from xmlstreamprocessor_spark.sources.xml_batch import iterparse_records
+from xmlstreamprocessor_spark.sources.xml_batch import _row_batches, iterparse_records
 
 NS = "{urn:x}"
 TAGS = ["a", "b", "pax", "zz", f"{NS}a", f"{NS}b", "{urn:y}b"]
@@ -187,6 +188,46 @@ def test_record_loop_matches_interpreter(spec, docs, row_tag, strict):
         lambda: list(iterparse_records(io.BytesIO(data), row_tag, compiled))
     )
     assert got == want
+
+
+@COMMON
+@given(
+    root_specs,
+    st.lists(elements(tags=ROOT_TAGS), min_size=1, max_size=3),
+    st.sampled_from(["a", "b", "*", "p*x", f"{NS}a", "nope"]),
+    st.booleans(),
+)
+def test_file_core_matches_interpreter(spec, docs, row_tag, strict):
+    """The file core every file surface reads through, under FAILFAST:
+    over two copies of a document, its batches concatenate to the
+    interpreter's records, and every batch but the last is full, for
+    batch sizes 1, 2 and unbounded."""
+    root = ET.Element("root")
+    root.extend(docs)
+    data = ET.tostring(root)
+    compiled = compile_spec(spec, strict_ns=strict)
+
+    def reference():
+        recs = _reference_records(data, row_tag, spec, strict)
+        return [tuple(r.values()) for r in recs] * 2
+
+    want = _outcome(reference)
+    for batch_rows in (1, 2, sys.maxsize):
+        sizes = []
+
+        def core():
+            files = [("a.xml", io.BytesIO(data)), ("b.xml", io.BytesIO(data))]
+            out = []
+            core = _row_batches(files, row_tag, compiled, "FAILFAST", batch_rows, list)
+            for rows in core:
+                sizes.append(len(rows))
+                out += rows
+            return out
+
+        assert _outcome(core) == want
+        if want[0] == "ok":
+            assert all(n == batch_rows for n in sizes[:-1])
+            assert all(0 < n <= batch_rows for n in sizes)
 
 
 def test_generated_source_is_inspectable_and_pickle_regenerates():

@@ -1,19 +1,23 @@
-"""One malformed-input contract for every file surface, with no Spark
-session.
+"""One input contract for every file surface, with no Spark session.
 
 ``read_xml``/``stream_xml`` (the ``_file_frames`` partition function) and
 the ``xspxml`` source (``XmlSourceReader.read``) read files through the same
-loop, ``xml_batch._file_rows``.  On one corpus — a good file, a bad record
+core, ``xml_batch._row_batches``.  On one corpus — a good file, a bad record
 mid-file, a bad cast, a truncated record, a broken tail after the last
 record, a namespaced file and a Latin-1 file — both must keep every well-formed record, before and after a bad
 one, and count the same malformed records: one triage row each under
 PERMISSIVE, nothing under DROPMALFORMED.  The ``xspxml`` stream reader's
 planning is checked here too: each micro-batch gets exactly the new files.
+So are the ``xspxml`` reader's file listing, its timestamp zone and its
+spec/schema check.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import io
+import os
+import time
 
 import pandas as pd
 import pytest
@@ -226,3 +230,65 @@ def test_source_triages_failing_attribute_coercion(tmp_path):
     assert _source_surface(str(path), "PERMISSIVE") == ([1, 3], 1)
     with pytest.raises(ValueError):
         _source_surface(str(path), "FAILFAST")
+
+
+def test_source_lists_files_as_spark_does(tmp_path):
+    """A path segment starting with ``.``, or with ``_`` and holding no
+    ``=``, is not data, as in Spark's file index: job markers, temporary
+    output and side files are not planned; hive ``k=v`` directories are,
+    ``_k=v`` ones included."""
+    body = CORPUS["good.xml"][0]
+    data = ["part-0.xml", "k=1/part-1.xml", "_k=2/part-2.xml"]
+    skipped = ["_SUCCESS", "_temporary/0/part-3.xml", ".part-0.xml.crc", "k=1/_SUCCESS"]
+    for rel in data + skipped:
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"" if "_SUCCESS" in rel else body)
+    reader = XmlSourceReader(SCHEMA, {"path": str(tmp_path), "rowTag": "r"})
+    planned = [os.path.relpath(p.path, tmp_path) for p in reader.partitions()]
+    assert planned == sorted(data)
+
+
+@pytest.fixture
+def new_york_tz():
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_source_reads_offsetless_timestamps_as_utc(tmp_path, new_york_tz, mode):
+    """Offset-less timestamp text is a UTC instant whatever the process
+    zone, on the schema path and the spec path; no option moves it (the
+    removed ``sessionTz`` is ignored)."""
+    path = tmp_path / "ts.xml"
+    path.write_bytes(b"<root><r><ts>1996-01-02T00:00:00</ts></r></root>")
+    want = int(dt.datetime(1996, 1, 2, tzinfo=dt.timezone.utc).timestamp()) * 10**6
+    schema = T.StructType([T.StructField("ts", T.TimestampType())])
+    spec = compile_spec(X.struct("r", {"ts": X.ndate("ts")}))
+    options = {"path": str(path), "rowTag": "r", "mode": mode}
+    for extra in ({}, {"specPickle": spec_option(spec)}, {"sessionTz": "Asia/Tokyo"}):
+        reader = XmlSourceReader(schema, {**options, **extra})
+        [batch] = list(reader.read(_FilePartition(str(path))))
+        micros = batch.column("ts").cast("int64").to_pylist()
+        assert micros == [want], extra
+
+
+def test_source_checks_spec_names_at_construction(tmp_path):
+    """A ``specPickle`` spec whose names differ from the declared schema's
+    (a same-typed reordering included) is refused when the reader is
+    built, naming both lists, before any task runs."""
+    spec = compile_spec(X.struct("r", {"b": X.nint("b"), "a": X.nint("a")}))
+    schema = T.StructType(
+        [T.StructField("a", T.LongType()), T.StructField("b", T.LongType())]
+    )
+    options = {"path": str(tmp_path), "rowTag": "r", "specPickle": spec_option(spec)}
+    with pytest.raises(ValueError, match=r"\['b', 'a'\].*\['a', 'b'\]"):
+        XmlSourceReader(schema, options)
+    reordered = T.StructType(schema.fields[::-1])
+    assert XmlSourceReader(reordered, options).schema is reordered

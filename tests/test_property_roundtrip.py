@@ -197,7 +197,7 @@ def test_xspxml_kernel_roundtrip_property(tmp_path_factory, batch):
     import os
     from unittest import mock
 
-    from xmlstreamprocessor_spark.sources import datasource
+    from xmlstreamprocessor_spark.sources import xml_batch
     from xmlstreamprocessor_spark.sources.datasource import (
         _FilePartition,
         write_rows_xml,
@@ -211,8 +211,8 @@ def test_xspxml_kernel_roundtrip_property(tmp_path_factory, batch):
     want = [tuple(r[n] for n in names) for r in batch]
 
     def norm(rows):
-        # the reader yields SESSION-ZONE-aware timestamps by contract
-        # (default UTC, whatever the OS zone); normalize to naive UTC
+        # the reader's Arrow timestamps are UTC instants (to_pylist gives
+        # them UTC-aware, whatever the OS zone); normalize to naive UTC
         # wall time for the value compare.  The input datetimes were
         # naive and the writer serialized their wall clock, so equal wall
         # time IS round-trip equality.
@@ -240,7 +240,7 @@ def test_xspxml_kernel_roundtrip_property(tmp_path_factory, batch):
     assert got == want and sizes == [len(want)]
 
     # several batches per file: the same rows, split at the batch size
-    with mock.patch.object(datasource, "ARROW_BATCH_ROWS", 4):
+    with mock.patch.object(xml_batch, "MAX_RECORDS_PER_BATCH", 4):
         got, sizes = read()
     assert got == want
     assert sizes == [len(want[i : i + 4]) for i in range(0, len(want), 4)]

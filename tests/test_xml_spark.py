@@ -864,6 +864,31 @@ def test_xspxml_reader_malformed_modes(spark, tmp_path):
     assert perm[3][0] is None and perm[3][1].endswith("bad.xml")
 
 
+def test_xspxml_and_read_xml_skip_job_markers(spark, tmp_path):
+    """A directory a Spark job wrote holds an empty ``_SUCCESS`` marker
+    and may hold ``_temporary/`` output: ``read_xml`` (Spark's file index)
+    and the ``xspxml`` source skip both and return the same rows."""
+    from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+
+    register_xml_source(spark)
+    (tmp_path / "part-0.xml").write_text("<root><r><id>1</id></r></root>")
+    (tmp_path / "_SUCCESS").write_text("")
+    (tmp_path / "_temporary" / "0").mkdir(parents=True)
+    (tmp_path / "_temporary" / "0" / "part-1.xml").write_text(
+        "<root><r><id>2</id></r></root>"
+    )
+    spec = X.struct("r", {"id": X.nint("id")})
+    got = read_xml(spark, str(tmp_path), "r", spec).collect()
+    source = (
+        spark.read.format("xspxml")
+        .schema("id bigint")
+        .option("rowTag", "r")
+        .load(str(tmp_path))
+        .collect()
+    )
+    assert [r["id"] for r in got] == [r["id"] for r in source] == [1]
+
+
 def test_xspxml_reader_resyncs_after_malformed_record(spark, tmp_path):
     """Records AFTER a malformed one are recovered (Spark XML reader
     parity): the reader re-syncs at the next row-tag start instead of
@@ -1482,10 +1507,9 @@ def test_xspxml_writer_edge_values_roundtrip(spark, tmp_path):
 
 
 def test_xspxml_timestamp_paths_agree(spark, tmp_path):
-    """Offset-less timestamp text is interpreted in the source's fixed
-    sessionTz (default UTC), never in the worker's OS zone, on the one
-    Arrow hand-off path, in every mode (the PERMISSIVE rows pass through
-    the per-row fixes instead of the per-batch ones)."""
+    """Offset-less timestamp text reads as UTC, the engine's session zone,
+    in every mode (FAILFAST and PERMISSIVE rows take different paths
+    through the file core)."""
     from pyspark.sql import functions as F
 
     from xmlstreamprocessor_spark.sources.datasource import register_xml_source

@@ -13,12 +13,13 @@ scans XML files distributed — one input partition per file (``read_xml``
 packs small files into fewer tasks), bounded memory per task via iterparse,
 and the records shaped by the user schema (element text and attributes matched
 by field name, attributes winning only when no element matches; wildcard /
-Tag() specs need the richer ``read_xml(spec=...)`` path).  Each task reads
-its file with ``read_xml``'s own loop (``xml_batch._file_rows``), so the two
-return the same rows under every ``mode``, and hands Spark Arrow record
-batches of ``ARROW_BATCH_ROWS`` records.  ``readStream.format("xspxml")``
-plans one partition per newly listed file and reads it on the executors
-the same way.
+Tag() specs need the richer ``read_xml(spec=...)`` path).  Files are listed
+as Spark's file index lists them, and each task reads its file through
+``read_xml``'s own core (``xml_batch._row_batches``), so the two return the
+same rows under every ``mode``; offset-less timestamps read as UTC.  Spark
+gets Arrow record batches of ``xml_batch.MAX_RECORDS_PER_BATCH`` records.
+``readStream.format("xspxml")`` plans one partition per newly listed file
+and reads it on the executors the same way.
 
 A spec-aware variant rides the same source: ``option("specPickle", ...)``
 (produced by ``spec_option``) carries a pickled compiled spec so the full
@@ -29,8 +30,7 @@ the registered source too.
 from __future__ import annotations
 
 import base64
-import datetime as _dt
-import itertools
+import os
 import pickle
 from collections.abc import Callable, Iterator
 
@@ -46,11 +46,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from xmlstreamprocessor_spark.plans.spec import CompiledSpec, Struct, compile_spec
-from xmlstreamprocessor_spark.sources.xml_batch import _file_rows
-
-# records per Arrow RecordBatch a read hands Spark: one columnar
-# conversion per batch instead of a pickled tuple per record
-ARROW_BATCH_ROWS = 4096
+from xmlstreamprocessor_spark.sources import xml_batch
 
 
 def spec_option(spec: Struct | CompiledSpec) -> str:
@@ -100,6 +96,13 @@ class XmlSourceReader(DataSourceReader):
             raise ValueError("xspxml needs .option('path', ...) or load(path)")
         spec_b64 = options.get("specPickle")
         self.spec_bytes = base64.b64decode(spec_b64) if spec_b64 else None
+        if self.spec_bytes is not None:
+            names = pickle.loads(self.spec_bytes).names
+            if names != schema.names:
+                raise ValueError(
+                    f"specPickle spec fields {names} do not match the "
+                    f"declared schema fields {schema.names}"
+                )
         self._eq_filters: dict = {}
         # opt-in: Spark reuses the first-planned partition list for later
         # UNFILTERED scans of the same DataFrame (observed on 4.1), so
@@ -111,18 +114,6 @@ class XmlSourceReader(DataSourceReader):
         self.mode = str(options.get("mode", "FAILFAST")).upper()
         if self.mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
             raise ValueError(f"unknown mode {self.mode!r}")
-        # Offset-less timestamp text is interpreted in ONE fixed zone —
-        # option("sessionTz", ...), default UTC (this engine pins
-        # spark.sql.session.timeZone to UTC, see session.py) — and read()
-        # localizes every parsed timestamp to it, yielding AWARE
-        # datetimes, so the instant never depends on the worker's OS
-        # zone.  An explicit option rather than sniffing
-        # SparkSession.getActiveSession(): the reader may be constructed
-        # in Spark's python planner worker where no session is active
-        # (measured: a post-registration session-zone change did not
-        # reach the capture), and a deterministic default beats a
-        # construction-context-dependent one.
-        self.session_tz = options.get("sessionTz", "UTC")
 
     def pushFilters(self, filters):
         """Partition pruning for the hive-style layout the writer emits:
@@ -170,13 +161,12 @@ class XmlSourceReader(DataSourceReader):
             )
 
         import glob
-        import os
 
         if os.path.isdir(self.path):
             files = sorted(
                 p
                 for p in glob.glob(os.path.join(self.path, "**"), recursive=True)
-                if os.path.isfile(p)
+                if os.path.isfile(p) and not _not_data(os.path.relpath(p, self.path))
             )
         else:
             files = sorted(glob.glob(self.path)) or [self.path]
@@ -187,8 +177,6 @@ class XmlSourceReader(DataSourceReader):
         the file, decoded and coerced to the declared field type — the
         writer's ``partitionBy`` inverse (partition columns live in the
         PATH, not the XML)."""
-        import os
-
         vals: dict = {}
         rel = os.path.relpath(os.path.dirname(fpath), self.path)
         if rel in (".", ""):
@@ -208,37 +196,36 @@ class XmlSourceReader(DataSourceReader):
             vals[k] = conv(v) if conv else v
         return vals
 
-    def _column_fixes(self, fpath: str, coerce: bool) -> list[tuple[int, Callable]]:
-        """Per-column fixes applied to the kernel's rows, as (column index,
-        fn) pairs.  Partition columns take their value from the path.  On
-        the schema path (``coerce``), attribute fallbacks surface as raw
+    def _row_fix(self, fpath: str, coerce: bool) -> Callable[[tuple], tuple] | None:
+        """The per-row column fixes of one file's rows (None when there are
+        none).  Partition columns take their value from the path.  On the
+        schema path (``coerce``), attribute fallbacks surface as raw
         strings (reference rule: attributes are untyped, Parser.cs:417) and
-        are coerced to the declared type.  Timestamps are localized to the
-        session zone (see __init__): naive datetimes become aware, so
-        pyarrow's conversion gives the same instant whatever the worker's
-        OS zone."""
-        from zoneinfo import ZoneInfo
-
+        are coerced to the declared type."""
         pvals = self._partition_values(fpath)
-        tz = ZoneInfo(self.session_tz)
         fixes = []
         for i, f in enumerate(self.schema.fields):
             if f.name in pvals:
-                fn = _constant(pvals[f.name])
-            else:
-                fn = _coercer(f.dataType) if coerce else None
-            if f.dataType.typeName() == "timestamp":
-                fn = _localizer(tz, fn)
-            if fn is not None:
+                fixes.append((i, lambda _v, value=pvals[f.name]: value))
+            elif coerce and (fn := _coercer(f.dataType)) is not None:
                 fixes.append((i, fn))
-        return fixes
+        if not fixes:
+            return None
+
+        def fix(row: tuple) -> tuple:
+            fixed = list(row)
+            for i, fn in fixes:
+                fixed[i] = fn(fixed[i])
+            return tuple(fixed)
+
+        return fix
 
     def read(self, partition: _FilePartition) -> Iterator:
-        """One file as Arrow RecordBatches of ``ARROW_BATCH_ROWS`` records,
-        read by ``read_xml``'s loop (``_file_rows``) under this source's
-        ``mode``; a malformed record becomes one triage row (PERMISSIVE:
-        nulls, the file's path in a declared ``_corrupt_file``) or nothing
-        (DROPMALFORMED)."""
+        """One file as Arrow RecordBatches, one per batch of the file core
+        (``xml_batch._row_batches``) under this source's ``mode``; a
+        malformed record, or one whose column fix fails, becomes one triage
+        row (PERMISSIVE: nulls, the file's path in a declared
+        ``_corrupt_file``) or nothing (DROPMALFORMED)."""
         import pyarrow as pa
 
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -247,61 +234,40 @@ class XmlSourceReader(DataSourceReader):
             compiled = pickle.loads(self.spec_bytes)
         else:
             compiled = _schema_spec(self.schema)
-        names = compiled.names
-        out_names = [f.name for f in self.schema.fields]
-        assert names == out_names, (names, out_names)
-        fixes = self._column_fixes(partition.path, coerce=self.spec_bytes is None)
+        names = self.schema.names
+        corrupt_at = names.index("_corrupt_file") if "_corrupt_file" in names else None
+        fix = self._row_fix(partition.path, coerce=self.spec_bytes is None)
         pa_schema = to_arrow_schema(self.schema)
+
+        def emit(rows: list[tuple]) -> pa.RecordBatch:
+            cols = zip(*rows)
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
+                schema=pa_schema,
+            )
+
         with open(partition.path, "rb") as fh:
-            rows = _file_rows(fh, self.row_tag, compiled, self.mode)
-            if self.mode != "FAILFAST":
-                # a row whose column fix fails is malformed too, so the
-                # fixes run per row here, where a failure can be triaged
-                rows, fixes = self._settled(rows, fixes, partition.path), []
-            while batch := list(itertools.islice(rows, ARROW_BATCH_ROWS)):
-                cols = [list(c) for c in zip(*batch)]
-                for i, fn in fixes:
-                    cols[i] = [fn(v) for v in cols[i]]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
-                    schema=pa_schema,
-                )
-
-    def _settled(self, rows, fixes, path: str) -> Iterator[tuple]:
-        """PERMISSIVE/DROPMALFORMED rows with the column fixes applied:
-        each malformed-record marker, or row whose fix raises, becomes one
-        triage row (PERMISSIVE) or nothing (DROPMALFORMED)."""
-        triage = tuple(
-            path if n == "_corrupt_file" else None for n in self.schema.names
-        )
-        for row in rows:
-            if row is not None:
-                try:
-                    fixed = list(row)
-                    for i, fn in fixes:
-                        fixed[i] = fn(fixed[i])
-                except Exception:  # noqa: BLE001 — a failing coercion
-                    pass
-                else:
-                    yield tuple(fixed)
-                    continue
-            if self.mode == "PERMISSIVE":
-                yield triage
+            yield from xml_batch._row_batches(
+                [(partition.path, fh)],
+                self.row_tag,
+                compiled,
+                self.mode,
+                xml_batch.MAX_RECORDS_PER_BATCH,
+                emit,
+                corrupt_at,
+                fix,
+            )
 
 
-def _constant(value):
-    return lambda _v: value
-
-
-def _localizer(tz, inner: Callable | None) -> Callable:
-    def fn(v):
-        if inner is not None:
-            v = inner(v)
-        if isinstance(v, _dt.datetime) and v.tzinfo is None:
-            v = v.replace(tzinfo=tz)
-        return v
-
-    return fn
+def _not_data(rel: str) -> bool:
+    """Spark's file-index rule for a path relative to the scanned
+    directory: a segment starting with ``.``, or with ``_`` and holding no
+    ``=`` (hive ``_k=v`` directories stay), marks a file that is not data
+    (``_SUCCESS``, ``_temporary/...``, ``.crc`` side files)."""
+    return any(
+        seg.startswith(".") or (seg.startswith("_") and "=" not in seg)
+        for seg in rel.split(os.sep)
+    )
 
 
 def _coercer(dt) -> Callable | None:
@@ -390,8 +356,6 @@ class XmlStreamReader(DataSourceStreamReader):
         return {"files": {}}
 
     def latestOffset(self) -> dict:
-        import os
-
         out = {}
         for p in self._reader.partitions():
             try:

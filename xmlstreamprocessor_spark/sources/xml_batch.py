@@ -19,13 +19,17 @@ the same bounded-memory contract *per task* but scales out:
 Every surface drives one record loop, ``_iter_rows``, which yields the
 generated row function's tuples; output frames are built column-wise from
 those tuples, with no per-record dict.  Every file surface (``read_xml``,
-``stream_xml`` and the ``xspxml`` source) reads a file through
-``_file_rows``, so all of them share one malformed-input policy.
+``stream_xml`` and the ``xspxml`` source) reads files through one core,
+``_row_batches``: it parses each file with ``_file_rows``, settles
+malformed records into triage rows or drops them, and batches the rows.
+The carriers only turn its batches into pandas frames (``_file_frames``)
+or Arrow record batches (``XmlSourceReader.read``).
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import gc
 import io
 import itertools
@@ -33,6 +37,7 @@ import re
 import sys
 import xml.etree.ElementTree as ET
 from collections.abc import Callable, Iterable, Iterator
+from typing import BinaryIO
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -294,11 +299,84 @@ def _frame(schema: T.StructType, rows: list[tuple]) -> pd.DataFrame:
     )
 
 
+# Spark's default spark.sql.execution.arrow.maxRecordsPerBatch, also the
+# batch size of the xspxml source, whose reader has no session conf at hand
+MAX_RECORDS_PER_BATCH = 10000
+
+
 def _arrow_batch_rows(spark: SparkSession) -> int:
     """Records per output frame: Spark's own Arrow batch size (<= 0 means
     unbounded, as in Spark)."""
-    n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    n = int(spark.conf.get(conf, str(MAX_RECORDS_PER_BATCH)))
     return n if n > 0 else sys.maxsize
+
+
+def _row_batches(
+    files: Iterable[tuple[str, BinaryIO]],
+    row_tag: str,
+    compiled: CompiledSpec,
+    mode: str,
+    batch_rows: int,
+    emit: Callable[[list[tuple]], object],
+    corrupt_at: int | None = None,
+    fix: Callable[[tuple], tuple] | None = None,
+) -> Iterator:
+    """The core every file surface reads through: each ``(path, binary
+    file)`` is read by ``_file_rows``, each row rewritten by ``fix`` if
+    given, and the rows gathered in lists of at most ``batch_rows`` across
+    files, with GC deferred; each list is dropped once ``emit`` has turned
+    it into the batch yielded.  FAILFAST without a ``fix`` runs nothing per
+    row.  A malformed record (a marker, or a row whose ``fix`` raises)
+    fails FAILFAST, is dropped by DROPMALFORMED, and becomes one PERMISSIVE
+    triage row, null but for the file's path at ``corrupt_at``; at the
+    spec's width, that column is appended (null in data rows)."""
+    width = len(compiled.names)
+    pad = (None,) if mode == "PERMISSIVE" and corrupt_at == width else ()
+
+    def triaged(it: Iterator[tuple | None], path: str) -> Iterator[tuple]:
+        n = width + len(pad)
+        triage = tuple(path if i == corrupt_at else None for i in range(n))
+        for row in it:
+            if row is not None and fix is not None:
+                try:
+                    row = fix(row)
+                except Exception:  # noqa: BLE001 — a failing column fix
+                    row = None
+            if row is not None:
+                yield row + pad
+            elif mode == "PERMISSIVE":
+                yield triage
+
+    rows: list[tuple] = []
+    for path, fh in files:
+        it = _file_rows(fh, row_tag, compiled, mode)
+        if mode != "FAILFAST":
+            it = triaged(it, path)
+        elif fix is not None:
+            it = map(fix, it)
+        while True:
+            n = len(rows)
+            with _gc_deferred():
+                rows.extend(itertools.islice(it, batch_rows - n))
+            if len(rows) < batch_rows:
+                break
+            batch, rows = emit(rows), []
+            yield batch
+    if rows:
+        yield emit(rows)
+
+
+def _file_schema(compiled: CompiledSpec, mode: str, corrupt_column: str):
+    """``read_xml``'s output schema: under PERMISSIVE the spec's fields,
+    widened to nullable (a triage row is null in each), then
+    ``corrupt_column``; otherwise the spec's schema."""
+    if mode != "PERMISSIVE":
+        return compiled.schema
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in compiled.schema.fields]
+        + [T.StructField(corrupt_column, T.StringType(), True)]
+    )
 
 
 def _file_frames(
@@ -309,55 +387,20 @@ def _file_frames(
     corrupt_column: str = "_corrupt_file",
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """The ``mapInPandas`` function shared by ``read_xml`` and
-    ``stream_xml``: (path, content) file batches in, row frames of at most
-    ``batch_rows`` records out, each file read by ``_file_rows``.  A
-    malformed record fails the task (FAILFAST), or is dropped
-    (DROPMALFORMED) or becomes one all-null triage row naming its file
-    (PERMISSIVE); the records after it are kept either way."""
-    null_row = (None,) * len(compiled.names)
+    ``stream_xml``: (path, content) file batches in, one frame per
+    ``_row_batches`` batch out, the triage column appended last."""
+    emit = functools.partial(_frame, _file_schema(compiled, mode, corrupt_column))
+    corrupt_at = len(compiled.names)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows: list[tuple | None] = []
-        triage: list[tuple[int, str]] = []  # (row index, malformed file)
-
-        def settle(n: int, fpath: str) -> None:
-            # rows[n:] came from fpath: markers become triage rows or go
-            new = rows[n:]
-            del rows[n:]
-            for r in new:
-                if r is not None:
-                    rows.append(r)
-                elif mode == "PERMISSIVE":
-                    triage.append((len(rows), fpath))
-                    rows.append(null_row)
-
-        def flush() -> pd.DataFrame:
-            pdf = _frame(compiled.schema, rows)
-            if mode == "PERMISSIVE":
-                corrupt: list[str | None] = [None] * len(rows)
-                for i, fpath in triage:
-                    corrupt[i] = fpath
-                pdf[corrupt_column] = corrupt
-                triage.clear()
-            rows.clear()
-            return pdf
-
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                it = _file_rows(io.BytesIO(content), row_tag, compiled, mode)
-                while True:
-                    n = len(rows)
-                    with _gc_deferred():
-                        rows.extend(itertools.islice(it, batch_rows - n))
-                    exhausted = len(rows) < batch_rows
-                    if mode != "FAILFAST":
-                        settle(n, fpath)
-                    if len(rows) >= batch_rows:
-                        yield flush()
-                    if exhausted:
-                        break
-        if rows:
-            yield flush()
+        files = (
+            (fpath, io.BytesIO(content))
+            for pdf in batches
+            for fpath, content in zip(pdf["path"], pdf["content"])
+        )
+        return _row_batches(
+            files, row_tag, compiled, mode, batch_rows, emit, corrupt_at
+        )
 
     return run
 
@@ -528,23 +571,12 @@ def read_xml(
     if mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
         raise ValueError(f"unknown mode {mode!r}")
     compiled = _ensure_compiled(spec)
-    schema = compiled.schema
-    out_schema = schema
-    if mode == "PERMISSIVE":
-        from pyspark.sql import types as T
-
-        # the triage row is null in every data field -> widen to nullable
-        out_schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in schema.fields]
-            + [T.StructField(corrupt_column, T.StringType(), True)]
-        )
     files_df = spark.read.format("binaryFile").load(path).select("path", "content")
     if min_partitions:
         files_df = files_df.repartition(min_partitions)
-    run = _file_frames(
-        row_tag, compiled, _arrow_batch_rows(spark), mode, corrupt_column
-    )
-    return files_df.mapInPandas(run, schema=out_schema)
+    batch_rows = _arrow_batch_rows(spark)
+    run = _file_frames(row_tag, compiled, batch_rows, mode, corrupt_column)
+    return files_df.mapInPandas(run, _file_schema(compiled, mode, corrupt_column))
 
 
 # ---------------------------------------------------------------------------
