@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 All queries live in ``xmlstreamprocessor_spark/operators/`` and register
 themselves into a single REGISTRY (see operators/registry.py for the
@@ -23,100 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from xmlstreamprocessor_spark.operators import REGISTRY  # noqa: E402
 
-# The driver hash-verifies the FIRST 50 entries of queries() each round, so
-# the head of the ordering is a per-round curated window.  ROUND-14 window
-# (r13 verdict task #1): the THIRTEEN r8-stale carries LEAD the rotation
-# as the r13 verdict required — the exact cohort named in the r13 window
-# note, all untouched since and re-verified by the local strict gate.
-# One slot is the query ADDED in round 14 (dedup_semantic_prune_kmeans —
-# the Lloyd-anchored production-k SemDeDup face, r13 verdict #2).  Three
-# slots re-pin queries whose CODE this round changed: the bounded
-# bpe_apply_frame encode path -> tokenizer_bpe_encode_corpus; the
-# try/finally unpersist discipline in the trainer loop ->
-# tokenizer_bpe_train_k_merges; the shared dominance-tail extraction +
-# codegen dot swap -> dedup_semantic_prune.  The remaining 33 come from
-# the r9-stale cohort (47 members, newest driver verdict r9 by joining
-# CORRECTNESS_r01..r13; alphabetical-first fill).  The 14 r9 members
-# that don't fit (text_pii_scrub, text_quality_filter,
-# text_repetition_filter, text_rolling_hash_fingerprint,
-# text_token_count_bpe, unpivot_lineitem_measures,
-# window_lag_lead_order_gaps, window_range_frame_value_band,
-# window_rank_dense_ntile, window_running_total_per_customer,
-# window_sliding_1h_30m_events, xml_roundtrip_hetero_meta,
-# xml_roundtrip_hetero_meta_jvm, xml_roundtrip_lineitem_array) carry to
-# r15 at freshness r9 — none touched this round, all re-verified by the
-# local strict gate below before shipping.  After r14 no query's newest
-# driver verdict is older than r9.
-# COVERAGE GAP (by design of the 50-slot window): out-of-window queries
-# are verified only by the local strict gate — run `python
-# tools/check_correctness.py` (all queries, same compare as the driver)
-# before shipping a round.
-_PRIORITY = [
-    # the thirteen r8-stale carries — they lead, per the r13 verdict
-    "sort_top20_orders",
-    "subquery_exists_urgent_customers",
-    "subquery_scalar_above_avg_price",
-    "temporal_ewma_per_user",
-    "temporal_rollup_multires",
-    "text_langid_documents",
-    "text_stats_documents",
-    "text_tfidf_top_terms",
-    "window_session_10m_events",
-    "window_topk_orders_per_customer",
-    "window_trailing_7day_revenue",
-    "window_tumbling_hourly_events",
-    "xml_udtf_orders_struct",
-    # new query this round (never driver-checked)
-    "dedup_semantic_prune_kmeans",
-    # queries whose code round 14 changed
-    "tokenizer_bpe_encode_corpus",
-    "tokenizer_bpe_train_k_merges",
-    "dedup_semantic_prune",
-    # stalest re-checks: newest driver green was round 9 (33 of 47; the
-    # 14 carries to r15 are listed in the note above)
-    "agg_stats_moments",
-    "analytic_weekly_retention_cohorts",
-    "analytic_zscore_anomalies",
-    "dedup_connected_components",
-    "dedup_embedding_cosine_pairs_lsh",
-    "dedup_levenshtein_pairs",
-    "dedup_report_bundle",
-    "dedup_simhash_signatures",
-    "dedup_simhash_wide_signatures",
-    "graph_components_dup_groups",
-    "json_variant_shred_props",
-    "lateral_top2_orders_per_customer",
-    "merge_upsert_orders",
-    "mix_weighted_corpus",
-    "multimodal_audio_framing",
-    "multimodal_image_features",
-    "multimodal_image_resize_plan",
-    "q11_important_stock",
-    "q20_excess_shippers",
-    "q2_min_cost_supplier",
-    "sample_stratified_quota",
-    "scalar_map_functions",
-    "scd2_customer_priority_history",
-    "sessionize_events_30m",
-    "setop_except_all_statuses",
-    "similarity_centroid_per_label",
-    "similarity_ivf_assign_cells",
-    "similarity_rplsh_signatures",
-    "similarity_topk_ivf_multiprobe",
-    "temporal_gapfill_interpolate",
-    "temporal_gapfill_locf",
-    "text_decontaminate_overlap",
-    "text_langid_confusion",
-]
-
-
-def _ordered() -> list[str]:
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"priority list names unknown queries: {missing}")
-    rest = [n for n in REGISTRY if n not in set(_PRIORITY)]
-    return _PRIORITY + rest
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -125,15 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: REGISTRY[name][0] for name in _ordered()}
+    """One entry per implemented operator from SURVEY.md §2, in REGISTRY
+    order."""
+    return {name: fn for name, (fn, _) in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for every SQL-expressible query (others get
     the driver's weaker rows-only check)."""
-    return {
-        name: REGISTRY[name][1]
-        for name in _ordered()
-        if REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}

@@ -561,8 +561,8 @@ def test_winnowing_cost_fallback_branches_identical(spark, oracle_sf_dir):
 
 def test_winnowing_standard_corpus_stays_candidates_first(spark, oracle_sf_dir):
     """On the standard corpus the statistic must keep the original
-    candidates-first plan (VERDICT r4 #5: 'plan identical on the normal
-    corpus') — pinned by comparing auto against the forced branch."""
+    candidates-first plan (the plan stays identical on the normal
+    corpus) — pinned by comparing auto against the forced branch."""
     from xmlstreamprocessor_spark.operators import dedup as dd
 
     auto = _pairs(

@@ -279,6 +279,32 @@ def test_source_reads_offsetless_timestamps_as_utc(tmp_path, new_york_tz, mode):
         assert micros == [want], extra
 
 
+def _aware_timestamp(elem):
+    """The element's ISO text as a datetime, offset-aware when the text
+    carries an offset (a custom field may return either)."""
+    return dt.datetime.fromisoformat(elem.text)
+
+
+def test_source_stores_offset_aware_timestamps_as_their_instant(tmp_path):
+    """A custom field's offset-aware datetime reads back as the same
+    instant (12:00+05:00 is 07:00 UTC), not as its wall time; a naive one
+    is UTC as it is."""
+    path = tmp_path / "ts.xml"
+    path.write_bytes(
+        b"<root><r><t>2020-01-01T12:00:00+05:00</t></r>"
+        b"<r><t>2020-01-01T12:00:00</t></r></root>"
+    )
+    spec = compile_spec(
+        X.struct("r", {"t": X.custom("t", _aware_timestamp, T.TimestampType())})
+    )
+    options = {"path": str(path), "rowTag": "r", "specPickle": spec_option(spec)}
+    reader = XmlSourceReader(spec.schema, options)
+    [batch] = list(reader.read(_FilePartition(str(path))))
+    utc = dt.timezone.utc
+    want = [int(dt.datetime(2020, 1, 1, h, tzinfo=utc).timestamp()) * 10**6 for h in (7, 12)]
+    assert batch.column("t").cast("int64").to_pylist() == want
+
+
 def test_source_checks_spec_names_at_construction(tmp_path):
     """A ``specPickle`` spec whose names differ from the declared schema's
     (a same-typed reordering included) is refused when the reader is

@@ -352,6 +352,9 @@ def test_extract_xml_auto_dispatch(spark):
     deep_wild = X.struct("r", {"x": X.nint("pre*")})
     plan4 = extract_xml(docs, "doc", deep_wild)._jdf.queryExecution().toString()
     assert "MapInPandas" in plan4
+    # "auto" and "python" are the engines; extract_xml_jvm forces the JVM
+    with pytest.raises(ValueError, match="unknown engine 'jvm'"):
+        extract_xml(docs, "doc", num_spec, engine="jvm")
 
 
 def test_extract_xml_permissive_modes(spark):
@@ -1531,6 +1534,56 @@ def test_xspxml_timestamp_paths_agree(spark, tmp_path):
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
         ).collect()[0][0]
     assert got["FAILFAST"] == got["PERMISSIVE"] == "1996-01-02 00:00:00"
+
+
+def test_read_xml_and_xspxml_agree_on_offset_aware_timestamps(spark, tmp_path):
+    """A custom field's offset-aware datetime is one instant on both file
+    surfaces: 12:00+05:00 reads back as 07:00 UTC through ``read_xml`` and
+    through the ``xspxml`` source.  The converter ships to the workers as
+    a module (``addPyFile``), since a ``specPickle`` spec pickles it by
+    reference."""
+    import importlib
+    import sys
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from xmlstreamprocessor_spark.sources.datasource import (
+        register_xml_source,
+        spec_option,
+    )
+
+    mod_dir, data = tmp_path / "mod", tmp_path / "data"
+    mod_dir.mkdir()
+    data.mkdir()
+    (mod_dir / "xsp_aware_ts.py").write_text(
+        "import datetime\n\n\n"
+        "def parse(elem):\n"
+        "    return datetime.datetime.fromisoformat(elem.text)\n"
+    )
+    (data / "f.xml").write_text("<rows><r><t>2020-01-01T12:00:00+05:00</t></r></rows>")
+    spark.sparkContext.addPyFile(str(mod_dir / "xsp_aware_ts.py"))
+    sys.path.insert(0, str(mod_dir))
+    try:
+        parse = importlib.import_module("xsp_aware_ts").parse
+        spec = X.struct("r", {"t": X.custom("t", parse, T.TimestampType())})
+        register_xml_source(spark)
+        via_source = (
+            spark.read.format("xspxml")
+            .schema("t timestamp")
+            .option("rowTag", "r")
+            .option("specPickle", spec_option(spec))
+            .load(str(data))
+        )
+        via_read_xml = read_xml(spark, str(data), "r", spec)
+        got = [
+            df.select(F.unix_seconds("t")).collect()[0][0]
+            for df in (via_read_xml, via_source)
+        ]
+    finally:
+        sys.path.remove(str(mod_dir))
+        sys.modules.pop("xsp_aware_ts", None)
+    assert got == [1577862000, 1577862000]  # 2020-01-01T07:00:00Z
 
 
 # every Python worker of a get_session session forks from the engine's

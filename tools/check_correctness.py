@@ -1,8 +1,7 @@
 """Local mirror of the driver's correctness gate — STRICT mode.
 
 Runs every ``__spark_entry__.queries()`` entry and its ``oracle_sql()`` twin
-on the same parquet tables and compares them the way the round-1 driver
-evidently does (CORRECTNESS_r01.json forensics):
+on the same parquet tables and compares them strictly:
 
 * the DuckDB side is fetched via ``.df()`` — which converts **every**
   DECIMAL (any precision) and HUGEINT to float64;

@@ -29,13 +29,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BENCH_QUERIES  # noqa: E402
 from xmlstreamprocessor_spark.operators import REGISTRY  # noqa: E402
 from xmlstreamprocessor_spark.operators import registry as _registry  # noqa: E402
 from xmlstreamprocessor_spark.session import get_session  # noqa: E402
 
-# Coverage: the ENTIRE registry is audited (BENCH first for a stable
-# diff order, then every remaining registered query in registry order).
+# Coverage: the ENTIRE registry is audited, in registry order.
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -150,7 +148,7 @@ def check_regressions(old: dict, new: dict) -> list[str]:
 def main() -> None:
     check = "--check" in sys.argv
     spark = get_session("plan_audit", master="local[8]", shuffle_partitions=8)
-    names = BENCH_QUERIES + [n for n in REGISTRY if n not in BENCH_QUERIES]
+    names = list(REGISTRY)
     lines = [
         "# PLANS — physical-plan audit of every registered query",
         "",

@@ -5,9 +5,10 @@ Round 6 ended with a snapshot commit that broke 52 tests because a
 half-finished ``plans/spec.py`` refactor shipped untested.  This guard runs
 the cheap, Spark-free portions of the suite — the golden Test1.cs ports, the
 pure-Python property round-trips, the generated-kernel differential test,
-the worker-setup guard tests and the cross-surface malformed-input test —
-plus an import smoke of every package module,
-so a red kernel can never ship silently again (r6 verdict task #7).
+the worker-setup guard tests, the cross-surface malformed-input test, the
+plan-gate compare logic and the ``__spark_entry__`` contract — plus an
+import smoke of every package module,
+so a red kernel can never ship silently again.
 
 Wire-up: ``.git/hooks/pre-commit`` calls this script; it must exit 0 for the
 commit to proceed.  Bypass (emergencies only): ``git commit --no-verify``.
@@ -31,6 +32,8 @@ FAST_TESTS = [
     "tests/test_kernel_differential.py",
     "tests/test_worker_setup.py",
     "tests/test_malformed_input.py",
+    "tests/test_plan_gate.py",
+    "tests/test_entry_contract.py",
 ]
 
 
@@ -53,8 +56,7 @@ def main() -> int:
         sys.stderr.write(r.stderr[-3000:])
         return 1
 
-    # 2. driver-contract sanity: the entry module must import, every
-    #    _PRIORITY name must resolve in the REGISTRY (window typos), and
+    # 2. entry-contract sanity: __spark_entry__ must import and
     #    queries()/oracle_sql() must build (no SparkSession needed)
     r = subprocess.run(
         [
@@ -81,7 +83,7 @@ def main() -> int:
     if r.returncode != 0:
         sys.stderr.write(
             "precommit_guard: golden/property tests FAILED — refusing to commit.\n"
-            "Fix the kernel or stash the incomplete refactor (see VERDICT r6 #1).\n"
+            "Fix the kernel or stash the incomplete refactor.\n"
         )
         return 1
     return 0

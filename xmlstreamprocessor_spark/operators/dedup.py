@@ -142,17 +142,6 @@ _VERIFY_ARRAYS_MAX_CAND = 1_000_000
 # (0 -> always enumerate, inf -> always the two equi-joins).
 _VERIFY_ENUM_FACTOR = 1.0
 
-# Addendum-H knob (r11 verdict #3): when True, the dense-candidate
-# verify persists its pruned-corpus shingling DISK_ONLY instead of
-# recomputing it per consumer.  Default TRUE since r12: the A/B the r11
-# ambient noise left unresolved was re-run by
-# tools/bench_verify_persist_ab.py inside canary-certified quiet
-# windows and the persist won BOTH fully-certified rounds (53.9 vs
-# 88.0 s and 42.5 vs 50.7 s at sf1 — BASELINE round-12 addendum D),
-# refuting the r11 design-argument tiebreak.  The knob stays for
-# re-measurement.
-_VERIFY_PERSIST_SH = True
-
 # DISK_ONLY candidate blocks awaiting release (see _verify_jaccard).
 # Release discipline (r9 verdict #6): a call path that eagerly
 # MATERIALIZES its verified output records len(_SCRATCH_PERSISTS) before
@@ -231,21 +220,15 @@ def _verify_jaccard(spark, sf_dir, cand, threshold: float, docs=None):
     )
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     if n_cand > _VERIFY_ARRAYS_MAX_CAND:
-        # PERSISTED by default since r12: the dense branch reads the
-        # pruned-corpus shingling 4-6 times (decision stats, nn.count,
-        # the chosen join's sides, the na/nb joins).  The r11 review
-        # proposed this persist, the r11 A/B was ambient-inconclusive
-        # (walls 52-148 s for BOTH arms on identical code), and the r11
-        # design argument kept the recompute; the r12 re-run inside
-        # CANARY-CERTIFIED quiet windows settled it the other way — the
-        # persist won both fully-certified rounds, 0.61x/0.84x
-        # (BASELINE round-12 addendum D; knob above, harness
-        # tools/bench_verify_persist_ab.py).  DISK_ONLY for the same
-        # reason as the candidate block above; released by the same
-        # scratch discipline.
-        if _VERIFY_PERSIST_SH:
-            sh = sh.persist(StorageLevel.DISK_ONLY)
-            _SCRATCH_PERSISTS.append(sh)
+        # PERSISTED: the dense branch reads the pruned-corpus shingling
+        # 4-6 times (decision stats, nn.count, the chosen join's sides,
+        # the na/nb joins).  An A/B against recomputing it per consumer,
+        # run in quiet windows at sf1, had the persist win both rounds,
+        # 0.61x/0.84x (53.9 vs 88.0 s and 42.5 vs 50.7 s; BASELINE
+        # round-12 addendum D).  DISK_ONLY for the same reason as the
+        # candidate block above; released by the same scratch discipline.
+        sh = sh.persist(StorageLevel.DISK_ONLY)
+        _SCRATCH_PERSISTS.append(sh)
         e = sh.select("doc_id", "n", F.explode("s").alias("shingle"))
         nn = sh.select("doc_id", "n")
         # Two scalar-row plans for a dense candidate graph, cost-compared
@@ -469,7 +452,7 @@ def _jaccard_pairs_prefix(
 # so a rewrite of the corpus under the same path invalidates naturally —
 # a deployment would key by table snapshot version instead.  The dict is
 # bounded (LRU-ish: oldest insertion evicted past _PAIRS_MEMO_MAX) and
-# `clear_session_memos()` is the explicit invalidation hook — bench.py
+# `clear_session_memos()` is the explicit invalidation hook — a benchmark
 # calls it between runs so medians measure cold plans, not cache hits.
 _PAIRS_MEMO: dict[tuple, tuple[list, object]] = {}
 _PAIRS_MEMO_MAX = 8

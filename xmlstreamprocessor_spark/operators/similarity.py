@@ -2683,7 +2683,7 @@ def _kcenter_oracle(k: int) -> str:
 
 
 @query("sample_kcenter_coreset", oracle=_kcenter_oracle(_KC_K))
-def sample_kcenter_coreset(spark, sf_dir, k: int = _KC_K, iter_hook=None):
+def sample_kcenter_coreset(spark, sf_dir, k: int = _KC_K):
     """Greedy k-center coreset over the embedding corpus (Gonzalez '85,
     the classic 2-approximation): seed with the smallest vec_id, then
     k-1 times select the point FARTHEST from the chosen set (max of
@@ -2744,13 +2744,6 @@ def sample_kcenter_coreset(spark, sf_dir, k: int = _KC_K, iter_hook=None):
     live = [cur]  # persisted generations not yet released
     cur_path = None
     try:
-        if iter_hook is not None:
-            # rank 1 marks the setup boundary (seed chosen, no corpus
-            # scan yet) so a measurement tool can separate setup from
-            # per-selection walls — the bpe_train convention.  Inside
-            # the try (judge advice r14): a hook that raises must not
-            # leak the seed generation's persist mark.
-            iter_hook(1)
         for rank in range(2, k + 1):
             far = cur.orderBy(F.desc("mind"), F.asc("vec_id")).first()
             # ``cur`` is materialized in the block cache now — its
@@ -2791,8 +2784,6 @@ def sample_kcenter_coreset(spark, sf_dir, k: int = _KC_K, iter_hook=None):
                 if cur_path is not None:
                     drop_scratch(cur_path)
                 cur_path = p
-            if iter_hook is not None:
-                iter_hook(rank)
     finally:
         for old in live:
             old.unpersist()
@@ -3164,7 +3155,8 @@ def dedup_semantic_prune_kmeans(spark, sf_dir, k: int = _SEM_KM_K,
     at Spark's default hugeMethodLimit (the measured 13x cliff at
     k=1000/30x, still 1.5-1.7x at this registered shape) — and the cap
     is scoped here rather than session-global because it HURTS the deep
-    BPE fold chains (OPTIMIZATION_r14.md).  The final report is
+    BPE fold chains (~2x on their first runs, see
+    ``session.scoped_huge_method_limit``).  The final report is
     materialized inside the scope so the dominance tail executes under
     the cap too; the returned frame is a bounded parquet rescan."""
     from xmlstreamprocessor_spark.operators.dedup import materialize

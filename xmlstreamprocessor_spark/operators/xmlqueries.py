@@ -11,8 +11,8 @@ oracle never sees XML, so any extraction defect (casting, null rules,
 wildcard resolution, ordering) breaks the hash match.
 
 Scale: the XML build+extract is embarrassingly parallel (no shuffle until
-the final aggregate); throughput is the Arrow batch pipe, measured by
-bench.py at sf0.1.
+the final aggregate); throughput is the Arrow batch pipe, as measured at
+sf0.1.
 """
 
 from __future__ import annotations
@@ -106,8 +106,8 @@ def xml_roundtrip_wildcard_tag_events_jvm(spark, sf_dir):
     ``from_xml`` fast path (r7 verdict #2): the root NAME comes
     from one anchored regexp, the wildcard test is JVM string algebra,
     and the whole extraction stays inside whole-stage codegen — the spec
-    shape that previously paid the Python kernel unconditionally (the 5.5x
-    tax named in VERDICT r7 'What's missing' #1).  Identical oracle: both
+    shape that previously paid the Python kernel unconditionally (a
+    measured 5.5x tax).  Identical oracle: both
     execution paths must agree bit-for-bit."""
     e = t(spark, sf_dir, "events")
     doc = F.concat(

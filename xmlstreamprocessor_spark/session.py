@@ -62,7 +62,7 @@ def get_session(
         # runs (47.3/17.6 s at 8000 vs 21.9/10.9 s default) while only
         # the wide unrolled-dot fan-outs win from it — so the 8000 cap
         # is now SCOPED to those paths (dedup_semantic_prune_kmeans),
-        # where the 13x k=1000 cliff fix still applies (OPTIMIZATION_r14.md)
+        # where the 13x k=1000 cliff fix still applies
         # local-mode driver == executor: 32 task threads sharing one heap.
         # 8g starves them once a session has run tens of distinct plans
         # (codegen classes + shuffle/broadcast metadata + task buffers) and
@@ -104,7 +104,7 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     # fresh-session A/Bs at sf0.1 showed it costs ~2x on the deep BPE
     # fold chains while only the wide unrolled-dot fan-outs benefit; the
     # cap is scoped inside those query paths instead (see
-    # scoped_huge_method_limit below and OPTIMIZATION_r14.md).
+    # scoped_huge_method_limit below).
     return spark
 
 
@@ -119,7 +119,7 @@ def scoped_huge_method_limit(spark: SparkSession, limit: int = 8000):
     (65535) happily emits fused whole-stage methods past that size —
     which then run in the bytecode interpreter.  Measured on the k=1000
     centroid-assignment fan-out (60M pairs x 64-term unrolled-dot chain,
-    .scale/sf3): 164 s at the default vs 12.6 s at 8000, and still
+    30x sf0.1): 164 s at the default vs 12.6 s at 8000, and still
     1.5-1.7x at the registered k=8/sf0.1 shape.  But the SAME cap costs
     ~2x on the BPE fold chains' early runs (deep aggregate-lambda trees
     whose fused method lands between 8000 and 65535 and runs FASTER

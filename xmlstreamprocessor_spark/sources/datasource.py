@@ -30,6 +30,7 @@ the registered source too.
 from __future__ import annotations
 
 import base64
+import datetime
 import os
 import pickle
 from collections.abc import Callable, Iterator
@@ -238,9 +239,20 @@ class XmlSourceReader(DataSourceReader):
         corrupt_at = names.index("_corrupt_file") if "_corrupt_file" in names else None
         fix = self._row_fix(partition.path, coerce=self.spec_bytes is None)
         pa_schema = to_arrow_schema(self.schema)
+        # pyarrow stores an aware datetime's wall time in a tz-typed column
+        # and drops its offset, so aware values are shifted to UTC first
+        # (naive values already are UTC)
+        zoned = {
+            i
+            for i, f in enumerate(pa_schema)
+            if pa.types.is_timestamp(f.type) and f.type.tz is not None
+        }
 
         def emit(rows: list[tuple]) -> pa.RecordBatch:
-            cols = zip(*rows)
+            cols = (
+                [_as_utc(v) for v in c] if i in zoned else c
+                for i, c in enumerate(zip(*rows))
+            )
             return pa.RecordBatch.from_arrays(
                 [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
                 schema=pa_schema,
@@ -268,6 +280,14 @@ def _not_data(rel: str) -> bool:
         seg.startswith(".") or (seg.startswith("_") and "=" not in seg)
         for seg in rel.split(os.sep)
     )
+
+
+def _as_utc(v):
+    """An offset-aware datetime as the naive UTC datetime of the same
+    instant; anything else as it is."""
+    if getattr(v, "tzinfo", None) is None:
+        return v
+    return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
 
 
 def _coercer(dt) -> Callable | None:

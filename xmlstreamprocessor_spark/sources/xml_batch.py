@@ -461,7 +461,8 @@ def extract_xml(
       spec is expressible there AND has no element-string fields (strings
       are where the kernels can diverge on mixed content); otherwise the
       Python kernel.
-    * ``"jvm"`` / ``"python"`` — force a path.
+    * ``"python"`` — always the Python kernel.
+    To force the JVM path, call :func:`extract_xml_jvm`.
 
     ``mode`` (the standard Spark reader triple):
     * ``"FAILFAST"`` (default) — any malformed document or failing typed
@@ -484,10 +485,10 @@ def extract_xml(
     already wide (any real 100 TB scan) pass through untouched."""
     if mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
         raise ValueError(f"unknown mode {mode!r}")
+    if engine not in ("auto", "python"):
+        raise ValueError(f"unknown engine {engine!r}")
     compiled = _ensure_compiled(spec)
     if mode == "FAILFAST":
-        if engine == "jvm":
-            return extract_xml_jvm(df, col, compiled)
         if engine == "auto" and _jvm_safe(compiled):
             try:
                 return extract_xml_jvm(df, col, compiled)
@@ -549,7 +550,6 @@ def read_xml(
     path: str,
     row_tag: str,
     spec,
-    min_partitions: int | None = None,
     mode: str = "FAILFAST",
     corrupt_column: str = "_corrupt_file",
 ) -> DataFrame:
@@ -558,7 +558,6 @@ def read_xml(
     tasks by size (``spark.sql.files.maxPartitionBytes`` and
     ``openCostInBytes``), so a directory of 16 small files runs as a few
     multi-file tasks, and one large file runs on one core.
-    ``min_partitions`` repartitions the file list first.
 
     ``mode``: ``FAILFAST`` (default — a malformed file aborts the job, the
     reference's semantics), ``PERMISSIVE`` (every well-formed record is
@@ -572,8 +571,6 @@ def read_xml(
         raise ValueError(f"unknown mode {mode!r}")
     compiled = _ensure_compiled(spec)
     files_df = spark.read.format("binaryFile").load(path).select("path", "content")
-    if min_partitions:
-        files_df = files_df.repartition(min_partitions)
     batch_rows = _arrow_batch_rows(spark)
     run = _file_frames(row_tag, compiled, batch_rows, mode, corrupt_column)
     return files_df.mapInPandas(run, _file_schema(compiled, mode, corrupt_column))

@@ -279,7 +279,7 @@ def pair_graph_foreach_batch(
     df_stats COMPACTION (r9 verdict #7): the base df table for batch N is
     the sum over ``batch_id < N`` partitions, so without maintenance the
     per-batch read re-unions O(batch-count) partitions — measured on a
-    100-micro-batch soak (tools/soak_stream_ingest.py) the per-batch wall
+    100-micro-batch soak the per-batch wall
     creeps with batch_id on exactly that state read.  Every
     ``compact_every`` batches the body therefore writes the already-
     computed base aggregate to ``{state_dir}/df_stats_compact/upto=N``
