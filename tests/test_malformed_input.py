@@ -305,6 +305,37 @@ def test_source_stores_offset_aware_timestamps_as_their_instant(tmp_path):
     assert batch.column("t").cast("int64").to_pylist() == want
 
 
+def test_source_stores_nested_offset_aware_timestamps_as_their_instant(tmp_path):
+    """The emitter shifts offset-aware datetimes to UTC inside struct and
+    array values too; naive ones and other values pass as they are."""
+    from xmlstreamprocessor_spark.sources.datasource import _as_utc
+
+    aware = dt.datetime.fromisoformat("2020-01-01T12:00:00+05:00")
+    naive = dt.datetime(2020, 1, 1, 12)
+    seven = dt.datetime(2020, 1, 1, 7)
+    assert _as_utc(
+        {"s": {"t": aware, "n": 1}, "a": [aware, naive, None], "m": [{"u": aware}]}
+    ) == {"s": {"t": seven, "n": 1}, "a": [seven, naive, None], "m": [{"u": seven}]}
+
+    path = tmp_path / "ts.xml"
+    path.write_bytes(
+        b"<root><r><s><t>2020-01-01T12:00:00+05:00</t></s>"
+        b"<a><t>2020-01-01T12:00:00+05:00</t><t>2020-01-01T12:00:00</t></a></r></root>"
+    )
+    ts = X.custom("t", _aware_timestamp, T.TimestampType())
+    spec = compile_spec(
+        X.struct("r", {"s": X.struct("s", {"t": ts}), "a": X.array("a", ts)})
+    )
+    options = {"path": str(path), "rowTag": "r", "specPickle": spec_option(spec)}
+    [batch] = list(XmlSourceReader(spec.schema, options).read(_FilePartition(str(path))))
+    [row] = batch.to_pylist()
+    utc = dt.timezone.utc
+    assert row == {
+        "s": {"t": dt.datetime(2020, 1, 1, 7, tzinfo=utc)},
+        "a": [dt.datetime(2020, 1, 1, 7, tzinfo=utc), dt.datetime(2020, 1, 1, 12, tzinfo=utc)],
+    }
+
+
 def test_source_checks_spec_names_at_construction(tmp_path):
     """A ``specPickle`` spec whose names differ from the declared schema's
     (a same-typed reordering included) is refused when the reader is

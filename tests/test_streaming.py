@@ -233,6 +233,82 @@ def test_stream_foreach_batch_sink(spark, tmp_path):
     assert sum(n for _, n in seen) == total
 
 
+def test_stream_state_partitions_fixed_at_first_start(spark, tmp_path):
+    """A dedup stream's state partition count is fixed when its checkpoint
+    is first written: a query restarted through the sink helpers keeps the
+    4 partitions of a checkpoint written at the session's count, a new
+    query started through them gets ``max(1, defaultParallelism // 4)``,
+    and the session's own count is untouched.  Restarts read only new
+    files, with no loss and no duplicates."""
+    from xmlstreamprocessor_spark.plans import X
+    from xmlstreamprocessor_spark.streaming.sinks import (
+        write_stream_foreach_batch,
+        write_stream_parquet,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    spec = X.struct("e", {"eid": X.nint("id"), "ts": X.ndate("ts")})
+
+    def write_file(name, ids):
+        recs = "".join(
+            f"<e><id>{i}</id><ts>2024-01-01T09:00:00</ts></e>" for i in ids
+        )
+        (src / name).write_text(f"<events>{recs}</events>")
+
+    def deduped():
+        return dedup_within_watermark(
+            stream_xml(spark, str(src), "e", spec), ["eid"], "1 hour"
+        )
+
+    def state_partitions(q):
+        return {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+
+    got = []
+
+    def collect(batch_df, _batch_id):
+        got.extend(r["eid"] for r in batch_df.collect())
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    ckpt = str(tmp_path / "ckpt")
+    write_file("a.xml", [1, 2, 2, 3])
+    q = (
+        deduped()
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert state_partitions(q) == {4}
+    assert sorted(got) == [1, 2, 3]
+
+    got.clear()
+    write_file("b.xml", [3, 4, 5, 5])
+    q = write_stream_foreach_batch(deduped(), ckpt, collect, available_now=True)
+    q.awaitTermination(120)
+    assert state_partitions(q) == {4}
+    assert sorted(got) == [4, 5]  # a.xml not re-read; 3 still in the state
+
+    fresh = max(1, spark.sparkContext.defaultParallelism // 4)
+    q = write_stream_parquet(
+        deduped(),
+        path=str(tmp_path / "out"),
+        checkpoint=str(tmp_path / "ckpt2"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert state_partitions(q) == {fresh}
+    assert sorted(
+        r["eid"] for r in spark.read.parquet(str(tmp_path / "out")).collect()
+    ) == [1, 2, 3, 4, 5]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
 def test_stream_event_time_sessionize_closes_on_watermark(spark):
     from xmlstreamprocessor_spark.streaming.stateful import sessionize_event_time
 

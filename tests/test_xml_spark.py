@@ -892,6 +892,39 @@ def test_xspxml_and_read_xml_skip_job_markers(spark, tmp_path):
     assert [r["id"] for r in got] == [r["id"] for r in source] == [1]
 
 
+def test_xspxml_reads_a_relative_single_file_path(spark):
+    """A bare file name resolves against the working directory, and a
+    single-file path has no partition directories: ``xspxml`` reads it,
+    as it reads the same file by its absolute path."""
+    import os
+    import uuid
+
+    from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+
+    register_xml_source(spark)
+    # Python workers resolve relative paths against the JVM's directory
+    cwd = spark.sparkContext._jvm.java.lang.System.getProperty("user.dir")
+    name = f"xsp-relative-{uuid.uuid4().hex}.xml"
+    path = os.path.join(cwd, name)
+    with open(path, "w") as fh:
+        fh.write("<root><r><id>1</id></r><r><id>2</id></r></root>")
+    try:
+        got = [
+            sorted(
+                r["id"]
+                for r in spark.read.format("xspxml")
+                .schema("id bigint")
+                .option("rowTag", "r")
+                .load(p)
+                .collect()
+            )
+            for p in (name, path)
+        ]
+    finally:
+        os.remove(path)
+    assert got == [[1, 2], [1, 2]]
+
+
 def test_xspxml_reader_resyncs_after_malformed_record(spark, tmp_path):
     """Records AFTER a malformed one are recovered (Spark XML reader
     parity): the reader re-syncs at the next row-tag start instead of
@@ -1539,8 +1572,9 @@ def test_xspxml_timestamp_paths_agree(spark, tmp_path):
 def test_read_xml_and_xspxml_agree_on_offset_aware_timestamps(spark, tmp_path):
     """A custom field's offset-aware datetime is one instant on both file
     surfaces: 12:00+05:00 reads back as 07:00 UTC through ``read_xml`` and
-    through the ``xspxml`` source.  The converter ships to the workers as
-    a module (``addPyFile``), since a ``specPickle`` spec pickles it by
+    through the ``xspxml`` source, at the top level and inside a struct
+    and an array.  The converter ships to the workers as a module
+    (``addPyFile``), since a ``specPickle`` spec pickles it by
     reference."""
     import importlib
     import sys
@@ -1561,29 +1595,42 @@ def test_read_xml_and_xspxml_agree_on_offset_aware_timestamps(spark, tmp_path):
         "def parse(elem):\n"
         "    return datetime.datetime.fromisoformat(elem.text)\n"
     )
-    (data / "f.xml").write_text("<rows><r><t>2020-01-01T12:00:00+05:00</t></r></rows>")
+    aware = "<t>2020-01-01T12:00:00+05:00</t>"
+    (data / "f.xml").write_text(
+        f"<rows><r>{aware}<s>{aware}</s><a>{aware}{aware}</a></r></rows>"
+    )
     spark.sparkContext.addPyFile(str(mod_dir / "xsp_aware_ts.py"))
     sys.path.insert(0, str(mod_dir))
     try:
         parse = importlib.import_module("xsp_aware_ts").parse
-        spec = X.struct("r", {"t": X.custom("t", parse, T.TimestampType())})
+        ts = X.custom("t", parse, T.TimestampType())
+        spec = X.struct(
+            "r", {"t": ts, "s": X.struct("s", {"t": ts}), "a": X.array("a", ts)}
+        )
         register_xml_source(spark)
         via_source = (
             spark.read.format("xspxml")
-            .schema("t timestamp")
+            .schema("t timestamp, s struct<t: timestamp>, a array<timestamp>")
             .option("rowTag", "r")
             .option("specPickle", spec_option(spec))
             .load(str(data))
         )
         via_read_xml = read_xml(spark, str(data), "r", spec)
         got = [
-            df.select(F.unix_seconds("t")).collect()[0][0]
+            tuple(
+                df.select(
+                    F.unix_seconds("t"),
+                    F.unix_seconds("s.t"),
+                    F.transform("a", F.unix_seconds),
+                ).collect()[0]
+            )
             for df in (via_read_xml, via_source)
         ]
     finally:
         sys.path.remove(str(mod_dir))
         sys.modules.pop("xsp_aware_ts", None)
-    assert got == [1577862000, 1577862000]  # 2020-01-01T07:00:00Z
+    seven = 1577862000  # 2020-01-01T07:00:00Z
+    assert got == [(seven, seven, [seven, seven])] * 2
 
 
 # every Python worker of a get_session session forks from the engine's
@@ -1619,6 +1666,35 @@ def test_worker_daemon_guards_plain_python_functions(spark):
     )
     assert sorted(r["id"] for r in rows) == list(range(8))
     assert {(r["guarded"], r["daemon"]) for r in rows} == {(True, DAEMON_MODULE)}
+
+
+def test_workers_talk_to_the_jvm_over_a_unix_domain_socket(spark):
+    """``get_session`` sets PySpark's static Unix-domain-socket conf where
+    the platform has ``AF_UNIX``, and a one-task ``mapInPandas`` job runs
+    in a worker started in that mode and returns its rows."""
+    import socket
+
+    if not hasattr(socket, "AF_UNIX"):
+        pytest.skip("no AF_UNIX on this platform")
+    assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+
+    def probe(batches):
+        import os
+
+        import pandas as pd
+
+        # the daemon reads the mode from this variable, as PySpark does
+        mode = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "false").lower()
+        for pdf in batches:
+            yield pd.DataFrame({"id": pdf["id"], "uds": mode})
+
+    rows = (
+        spark.range(0, 5, numPartitions=1)
+        .mapInPandas(probe, "id long, uds string")
+        .collect()
+    )
+    assert sorted(r["id"] for r in rows) == list(range(5))
+    assert {r["uds"] for r in rows} == {"true"}
 
 
 def test_read_xml_runs_guarded_in_the_worker(spark, tmp_path):

@@ -5,7 +5,8 @@ Round 6 ended with a snapshot commit that broke 52 tests because a
 half-finished ``plans/spec.py`` refactor shipped untested.  This guard runs
 the cheap, Spark-free portions of the suite — the golden Test1.cs ports, the
 pure-Python property round-trips, the generated-kernel differential test,
-the worker-setup guard tests, the cross-surface malformed-input test, the
+the worker-setup guard tests, the cross-surface malformed-input test (with
+the ``xspxml`` emitter's timestamp tests, nested values included), the
 plan-gate compare logic and the ``__spark_entry__`` contract — plus an
 import smoke of every package module,
 so a red kernel can never ship silently again.

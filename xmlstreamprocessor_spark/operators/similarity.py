@@ -3149,18 +3149,24 @@ def dedup_semantic_prune_kmeans(spark, sf_dir, k: int = _SEM_KM_K,
     convention) and cuts the plan lineage per iteration, so iteration
     i+1's scan never re-derives iteration i.
 
-    Whole execution runs under ``scoped_huge_method_limit`` (r14): the
+    Whole execution runs with ``spark.sql.codegen.hugeMethodLimit`` at
+    8000, scoped by ``session.scoped_conf`` (r14): HotSpot refuses to JIT
+    any method over 8000 bytecodes (-XX:DontCompileHugeMethods), and the
     64-term unrolled-dot assignment chain and the dim-wide centroid-sum
-    aggregate are exactly the fused-method shapes HotSpot refuses to JIT
-    at Spark's default hugeMethodLimit (the measured 13x cliff at
-    k=1000/30x, still 1.5-1.7x at this registered shape) — and the cap
-    is scoped here rather than session-global because it HURTS the deep
-    BPE fold chains (~2x on their first runs, see
-    ``session.scoped_huge_method_limit``).  The final report is
-    materialized inside the scope so the dominance tail executes under
-    the cap too; the returned frame is a bounded parquet rescan."""
+    aggregate are exactly the fused-method shapes that pass that size at
+    Spark's default limit (65535) and then run interpreted — measured
+    164 s at the default vs 12.6 s at 8000 on the k=1000/30x sf0.1
+    fan-out, still 1.5-1.7x at this registered shape.  The cap is scoped
+    here rather than session-global because it HURTS the deep BPE fold
+    chains (~2x on their first runs: their fused methods run faster
+    interpreted than split per operator).  The kcenter-face dominance
+    tail does NOT scope it: at its registered shape the default limit
+    was at parity or slightly faster ([18.4, 10.0, 9.9] s vs [21.4,
+    10.3, 10.2] s at 8000).  The final report is materialized inside the
+    scope so the dominance tail executes under the cap too; the returned
+    frame is a bounded parquet rescan."""
     from xmlstreamprocessor_spark.operators.dedup import materialize
-    from xmlstreamprocessor_spark.session import scoped_huge_method_limit
+    from xmlstreamprocessor_spark.session import scoped_conf
 
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
@@ -3171,7 +3177,7 @@ def dedup_semantic_prune_kmeans(spark, sf_dir, k: int = _SEM_KM_K,
     seeds = e.orderBy("vec_id").limit(k).collect()  # bounded: k rows
     if not seeds:  # empty corpus -> empty report, never a throw
         return spark.createDataFrame([], out_schema)
-    with scoped_huge_method_limit(spark):
+    with scoped_conf(spark, "spark.sql.codegen.hugeMethodLimit", "8000"):
         return _semantic_kmeans_body(
             spark, sf_dir, e, seeds, k, n_iter, threshold, materialize
         )

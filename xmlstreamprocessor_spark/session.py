@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import socket
 
 from pyspark.sql import SparkSession
 
@@ -61,8 +62,8 @@ def get_session(
         # found to cost ~2x on the deep BPE fold chains' first/second
         # runs (47.3/17.6 s at 8000 vs 21.9/10.9 s default) while only
         # the wide unrolled-dot fan-outs win from it — so the 8000 cap
-        # is now SCOPED to those paths (dedup_semantic_prune_kmeans),
-        # where the 13x k=1000 cliff fix still applies
+        # is now SCOPED to those paths (dedup_semantic_prune_kmeans, via
+        # scoped_conf), where the 13x k=1000 cliff fix still applies
         # local-mode driver == executor: 32 task threads sharing one heap.
         # 8g starves them once a session has run tens of distinct plans
         # (codegen classes + shuffle/broadcast metadata + task buffers) and
@@ -82,6 +83,13 @@ def get_session(
         # the builder can set it
         .config("spark.python.daemon.module", DAEMON_MODULE)
     )
+    if hasattr(socket, "AF_UNIX"):
+        # Python workers and the JVM talk over a Unix domain socket, not
+        # loopback TCP: a one-task job that moves little data took about
+        # 40 ms longer over TCP (86 vs 46 ms median wall; README,
+        # "Per-task worker cost").  Static, like the daemon module;
+        # PySpark raises where AF_UNIX is missing.
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true")
     return builder.getOrCreate()
 
 
@@ -93,9 +101,12 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     who built the session.
 
     ``spark.python.daemon.module`` (``get_session``'s worker daemon, see
-    ``_daemon.py``) is a static conf and cannot be set here.  A session
-    built elsewhere sets it on its own builder, or every Python task pays
-    the unguarded per-task ``zipimport`` refresh (about 260 ms of CPU).
+    ``_daemon.py``) and ``spark.python.unix.domain.socket.enabled`` are
+    static confs and cannot be set here.  A session built elsewhere sets
+    them on its own builder (the socket conf only where ``socket.AF_UNIX``
+    exists), or every Python task pays the unguarded per-task
+    ``zipimport`` refresh (about 260 ms of CPU) and about 40 ms of wall
+    time on the loopback TCP channel (README, "Per-task worker cost").
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -104,51 +115,35 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     # fresh-session A/Bs at sf0.1 showed it costs ~2x on the deep BPE
     # fold chains while only the wide unrolled-dot fan-outs benefit; the
     # cap is scoped inside those query paths instead (see
-    # scoped_huge_method_limit below).
+    # scoped_conf below).
     return spark
 
 
 @contextlib.contextmanager
-def scoped_huge_method_limit(spark: SparkSession, limit: int = 8000):
-    """Context manager: set ``spark.sql.codegen.hugeMethodLimit`` for a
-    wide-expression-chain computation, restoring the previous value on
-    exit.
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Context manager: set the runtime SQL conf ``key`` to ``value`` for
+    the block, restoring the previous value on exit.
 
-    Why scoped, not global: HotSpot refuses to JIT any method over 8000
-    bytecodes (-XX:DontCompileHugeMethods), and Spark's default limit
-    (65535) happily emits fused whole-stage methods past that size —
-    which then run in the bytecode interpreter.  Measured on the k=1000
-    centroid-assignment fan-out (60M pairs x 64-term unrolled-dot chain,
-    30x sf0.1): 164 s at the default vs 12.6 s at 8000, and still
-    1.5-1.7x at the registered k=8/sf0.1 shape.  But the SAME cap costs
-    ~2x on the BPE fold chains' early runs (deep aggregate-lambda trees
-    whose fused method lands between 8000 and 65535 and runs FASTER
-    fused-interpreted than split per-operator).  So callers whose hot
-    loop is a wide arithmetic chain opt in around their computation —
-    the caller must force execution (materialize/collect) inside the
-    ``with`` block, because lazy frames returned out of it execute under
-    the restored conf.
+    For confs that must hold for one computation only: the
+    ``spark.sql.codegen.hugeMethodLimit`` cap around wide arithmetic
+    chains (``operators.similarity``), and the state partition count a
+    streaming query fixes when it starts (``streaming.sinks``).  A lazy
+    frame returned out of the block executes under the restored conf, so
+    the caller forces execution (materialize/collect, or a query's
+    ``start()``) inside it.
 
-    CONCURRENCY CONTRACT (judge advice r14): the conf is session-global
-    runtime state, so any query executing CONCURRENTLY on the same
-    SparkSession (another driver thread, an overlapping lazy action)
-    silently runs under the scoped cap while the block is open.  This
-    engine's query functions are single-threaded per session by design
-    (the bench, the oracle driver and the streaming foreachBatch bodies
-    all serialize their actions); a deployment that shares one session
-    across driver threads must either serialize around this manager or
-    clone the session (``spark.newSession()``) per thread — newSession
-    shares the SparkContext but isolates the SQL conf.
-
-    The kcenter-face dominance tail deliberately does NOT scope this:
-    measured at its registered shape, default-limit runs were at parity
-    or slightly faster ([18.4, 10.0, 9.9] s vs [21.4, 10.3, 10.2] s at
-    8000) — its fused method sits on the good side of the JIT cliff,
-    and method size depends on the expression, not the data volume, so
-    the parity holds at scale."""
-    key = "spark.sql.codegen.hugeMethodLimit"
+    CONCURRENCY CONTRACT: the conf is session-global runtime state, so any
+    query executing CONCURRENTLY on the same SparkSession (another driver
+    thread, an overlapping lazy action) silently runs under the scoped
+    value while the block is open.  This engine's query functions are
+    single-threaded per session by design (the bench, the oracle driver
+    and the streaming foreachBatch bodies all serialize their actions); a
+    deployment that shares one session across driver threads must either
+    serialize around this manager or clone the session
+    (``spark.newSession()``) per thread — newSession shares the
+    SparkContext but isolates the SQL conf."""
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(limit))
+    spark.conf.set(key, value)
     try:
         yield spark
     finally:

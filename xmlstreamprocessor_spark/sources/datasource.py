@@ -179,7 +179,10 @@ class XmlSourceReader(DataSourceReader):
         writer's ``partitionBy`` inverse (partition columns live in the
         PATH, not the XML)."""
         vals: dict = {}
-        rel = os.path.relpath(os.path.dirname(fpath), self.path)
+        # a single-file path is its own base; a bare file name's directory
+        # is the working directory
+        base = os.path.dirname(self.path) if os.path.isfile(self.path) else self.path
+        rel = os.path.relpath(os.path.dirname(fpath) or os.curdir, base or os.curdir)
         if rel in (".", ""):
             return vals
         fields = {f.name: f.dataType for f in self.schema.fields}
@@ -240,13 +243,9 @@ class XmlSourceReader(DataSourceReader):
         fix = self._row_fix(partition.path, coerce=self.spec_bytes is None)
         pa_schema = to_arrow_schema(self.schema)
         # pyarrow stores an aware datetime's wall time in a tz-typed column
-        # and drops its offset, so aware values are shifted to UTC first
-        # (naive values already are UTC)
-        zoned = {
-            i
-            for i, f in enumerate(pa_schema)
-            if pa.types.is_timestamp(f.type) and f.type.tz is not None
-        }
+        # (nested in a struct or array too) and drops its offset, so aware
+        # values are shifted to UTC first (naive values already are UTC)
+        zoned = {i for i, f in enumerate(pa_schema) if _zoned(f.type)}
 
         def emit(rows: list[tuple]) -> pa.RecordBatch:
             cols = (
@@ -282,9 +281,24 @@ def _not_data(rel: str) -> bool:
     )
 
 
+def _zoned(t) -> bool:
+    """Whether the Arrow type ``t`` holds a tz-typed timestamp, at any
+    depth of struct, list and map types."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return t.tz is not None
+    return any(_zoned(t.field(i).type) for i in range(t.num_fields))
+
+
 def _as_utc(v):
     """An offset-aware datetime as the naive UTC datetime of the same
-    instant; anything else as it is."""
+    instant, inside struct (dict) and array (list) values too; anything
+    else as it is."""
+    if isinstance(v, dict):
+        return {k: _as_utc(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_as_utc(x) for x in v]
     if getattr(v, "tzinfo", None) is None:
         return v
     return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)

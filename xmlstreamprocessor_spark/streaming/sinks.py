@@ -10,7 +10,22 @@ without a checkpoint silently reprocesses on restart.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from xmlstreamprocessor_spark.session import scoped_conf
+
+
+def _start(df: DataFrame, w: DataStreamWriter) -> StreamingQuery:
+    """Start ``w`` with ``spark.sql.shuffle.partitions`` at
+    ``max(1, defaultParallelism // 4)`` for the start only.  A new query
+    fixes its state partition count from that conf when it starts (it
+    clones its session's conf there) and records it in the checkpoint, so
+    the query keeps the count and a restart keeps the recorded one; the
+    session's batch shuffles keep their own."""
+    spark = df.sparkSession
+    n = max(1, spark.sparkContext.defaultParallelism // 4)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(n)):
+        return w.start()
 
 
 def write_stream_parquet(
@@ -23,7 +38,18 @@ def write_stream_parquet(
 ) -> StreamingQuery:
     """Durable parquet sink with exactly-once semantics.  ``available_now``
     drains everything currently readable and terminates — the batch-backfill
-    mode; otherwise the query runs continuously."""
+    mode; otherwise the query runs continuously.
+
+    State partitions: a new query's stateful operators (dedup, windows,
+    stream joins) get ``max(1, defaultParallelism // 4)`` partitions, not
+    the session's ``spark.sql.shuffle.partitions``; a query restarted from
+    its checkpoint keeps the count recorded there.  Each micro-batch runs
+    one state-store task per partition whatever its size, and a
+    micro-batch of a few hundred rows is almost all such fixed cost: on a
+    4-vCPU host (the only size measured) one partition instead of four
+    cut the median record latency of a file stream into a dedup from 312
+    to 257 ms.  The rule is untested on larger hosts; a stream whose
+    state outgrows it needs a new checkpoint to change the count."""
     w = (
         df.writeStream.format("parquet")
         .option("path", path)
@@ -34,7 +60,7 @@ def write_stream_parquet(
         w = w.partitionBy(*partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df, w)
 
 
 def write_stream_foreach_batch(
@@ -46,8 +72,14 @@ def write_stream_foreach_batch(
     """foreachBatch escape hatch: ``fn(batch_df, batch_id)`` runs once per
     micro-batch with a *batch* DataFrame — the idiomatic route to sinks with
     no streaming writer (JDBC, merges).  fn must be idempotent on batch_id
-    for exactly-once."""
+    for exactly-once.
+
+    State partitions: as in ``write_stream_parquet``, a new query's
+    stateful operators get ``max(1, defaultParallelism // 4)`` partitions
+    (measured on a 4-vCPU host only), and a restarted query keeps the
+    count in its checkpoint.  The batch DataFrame ``fn`` receives runs
+    under the query's conf, so shuffles ``fn`` adds use that count too."""
     w = df.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df, w)
