@@ -6,10 +6,8 @@ core, ``xml_batch._row_batches``.  On one corpus — a good file, a bad record
 mid-file, a bad cast, a truncated record, a broken tail after the last
 record, a namespaced file and a Latin-1 file — both must keep every well-formed record, before and after a bad
 one, and count the same malformed records: one triage row each under
-PERMISSIVE, nothing under DROPMALFORMED.  The ``xspxml`` stream reader's
-planning is checked here too: each micro-batch gets exactly the new files.
-So are the ``xspxml`` reader's file listing, its timestamp zone and its
-spec/schema check.
+PERMISSIVE, nothing under DROPMALFORMED.  The ``xspxml`` reader's file
+listing, its timestamp zone and its spec/schema check are checked here too.
 """
 
 from __future__ import annotations
@@ -26,7 +24,6 @@ from pyspark.sql import types as T
 from xmlstreamprocessor_spark.plans import X, compile_spec
 from xmlstreamprocessor_spark.sources.datasource import (
     XmlSourceReader,
-    XmlStreamReader,
     _FilePartition,
     spec_option,
 )
@@ -196,28 +193,6 @@ def test_failfast_is_the_plain_record_loop(tmp_path, name):
         assert _frames_surface(name, body, "FAILFAST") == _source_surface(
             str(path), "FAILFAST"
         ) == ([1, 2], 0)
-
-
-def test_stream_reader_plans_only_new_files(tmp_path):
-    """Each micro-batch's partitions are exactly the files listed since
-    the previous offset, one partition per file; a batch with no new file
-    plans none."""
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.xml").write_bytes(CORPUS["good.xml"][0])
-    reader = XmlStreamReader(SCHEMA, {"path": str(src), "rowTag": "r"})
-    start = reader.initialOffset()
-    first = reader.latestOffset()
-    assert [p.path for p in reader.partitions(start, first)] == [str(src / "a.xml")]
-    (src / "b.xml").write_bytes(CORPUS["bad_mid.xml"][0])
-    (src / "c.xml").write_bytes(CORPUS["good.xml"][0])
-    second = reader.latestOffset()
-    parts = reader.partitions(first, second)
-    assert [p.path for p in parts] == [str(src / "b.xml"), str(src / "c.xml")]
-    assert reader.partitions(second, reader.latestOffset()) == []
-    # the partitions are read like a batch scan's
-    [batch] = list(reader.read(parts[1]))
-    assert batch.to_pydict()["id"] == [1, 2]
 
 
 def test_source_triages_failing_attribute_coercion(tmp_path):

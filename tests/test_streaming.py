@@ -510,17 +510,17 @@ def test_stream_pipeline_equals_batch_pipeline(spark):
     assert got == exp and len(got) > 0
 
 
-def test_xspxml_stream_resume_reads_only_new_files(spark, tmp_path):
+def test_stream_xml_resume_reads_only_new_files(spark, tmp_path):
     """Exactly-once file discovery across RESTARTS: a second streaming
     query on the same checkpoint must ingest only files that appeared
-    after the first drain (offset = ingested-file set, replayed from the
-    checkpoint log on restart)."""
-    from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+    after the first drain (Spark's file source keeps the ingested-file log
+    in the checkpoint and replays it on restart)."""
+    from xmlstreamprocessor_spark.plans import X
 
-    register_xml_source(spark)
     src = tmp_path / "src"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
+    spec = X.struct("r", {"id": X.nint("id")})
 
     def write_doc(name, ids):
         rows = "".join(f"<r><id>{i}</id></r>" for i in ids)
@@ -530,10 +530,7 @@ def test_xspxml_stream_resume_reads_only_new_files(spark, tmp_path):
 
     def drain():
         q = (
-            spark.readStream.format("xspxml")
-            .schema("id bigint")
-            .option("rowTag", "r")
-            .load(str(src))
+            stream_xml(spark, str(src), "r", spec)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -541,15 +538,54 @@ def test_xspxml_stream_resume_reads_only_new_files(spark, tmp_path):
             .start()
         )
         q.awaitTermination(120)
-        arrived = sum(p["numInputRows"] for p in q.recentProgress)
-        return arrived, sorted(r["id"] for r in spark.read.parquet(out).collect())
+        # binaryFile's input rows are files: one new file per drain
+        assert sum(p["numInputRows"] for p in q.recentProgress) == 1
+        return sorted(r["id"] for r in spark.read.parquet(out).collect())
 
     write_doc("a.xml", [1, 2, 3])
-    assert drain() == (3, [1, 2, 3])
+    first = drain()
+    assert (len(first), first) == (3, [1, 2, 3])
     write_doc("b.xml", [4, 5])
     # restart on the same checkpoint: only b.xml's 2 rows arrive, appended
     # exactly once; a.xml is NOT re-ingested (no duplicates of 1/2/3)
-    assert drain() == (2, [1, 2, 3, 4, 5])
+    second = drain()
+    assert (len(second) - len(first), second) == (2, [1, 2, 3, 4, 5])
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE", "DROPMALFORMED"])
+def test_stream_xml_malformed_files_match_read_xml(spark, tmp_path, mode):
+    """A malformed file does not fail the stream unless the mode says so:
+    over the cross-surface malformed corpus, an availableNow drain of
+    ``stream_xml`` returns exactly ``read_xml``'s rows under PERMISSIVE
+    (one ``_corrupt_file`` row per malformed record) and DROPMALFORMED
+    (none), and the query fails under FAILFAST."""
+    from pyspark.errors import StreamingQueryException
+
+    from tests.test_malformed_input import CORPUS, SPEC
+    from xmlstreamprocessor_spark.sources import read_xml
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for name, (body, _, _) in CORPUS.items():
+        (src / name).write_bytes(body)
+    out = stream_xml(spark, str(src), "r", SPEC, mode=mode)
+    if mode == "FAILFAST":
+        with pytest.raises(StreamingQueryException):
+            _drain(out, "t_xml_malformed_failfast")
+        return
+    name = f"t_xml_malformed_{mode.lower()}"
+    _drain(out, name)
+    got = sorted(map(tuple, spark.table(name).collect()), key=repr)
+    want = read_xml(spark, str(src), "r", SPEC, mode=mode).collect()
+    assert got == sorted(map(tuple, want), key=repr)
+    bad = sum(n for _, _, n in CORPUS.values())
+    good = sum(len(ids) for _, ids, _ in CORPUS.values())
+    if mode == "PERMISSIVE":
+        assert sum(r[-1] is not None for r in got) == bad == 6
+        assert len(got) == good + bad
+    else:
+        assert len(got) == good == 16
+        assert "_corrupt_file" not in spark.table(name).columns
 
 
 def test_stream_kafka_contract_with_file_backed_double(spark, tmp_path):

@@ -590,9 +590,10 @@ def test_xspxml_writer_partition_by_rejects_unknown(spark, tmp_path):
 
 
 def test_xspxml_stream_writer(spark, tmp_path):
-    """xspxml reader -> xspxml sink: staged-rename commit means the output
+    """stream_xml -> xspxml sink: staged-rename commit means the output
     dir holds only whole part files after the availableNow drain."""
     from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+    from xmlstreamprocessor_spark.streaming import stream_xml
 
     register_xml_source(spark)
     src = tmp_path / "src"
@@ -603,11 +604,7 @@ def test_xspxml_stream_writer(spark, tmp_path):
         )
     out = tmp_path / "out"
     q = (
-        spark.readStream.format("xspxml")
-        .schema("n int")
-        .option("rowTag", "rec")
-        .option("path", str(src))
-        .load()
+        stream_xml(spark, str(src), "rec", X.struct("rec", {"n": X.int_("n")}))
         .writeStream.format("xspxml")
         .option("rowTag", "rec")
         .option("path", str(out))
@@ -627,14 +624,15 @@ def test_xspxml_stream_writer(spark, tmp_path):
     assert sorted(r["n"] for r in back.collect()) == [0, 1, 10, 11]
 
 
-def test_registered_datasource_streaming(spark, tmp_path):
+def test_xspxml_has_no_stream_reader(spark, tmp_path):
+    """XML files stream through stream_xml only: a query on
+    readStream.format("xspxml") is defined, but fails when it starts."""
+    from pyspark.errors import StreamingQueryException
+
     from xmlstreamprocessor_spark.sources.datasource import register_xml_source
 
     register_xml_source(spark)
-    for i in range(2):
-        (tmp_path / f"s{i}.xml").write_text(
-            f"<docs><rec><n>{i}</n></rec><rec><n>{i + 10}</n></rec></docs>"
-        )
+    (tmp_path / "s0.xml").write_text("<docs><rec><n>0</n></rec></docs>")
     df = (
         spark.readStream.format("xspxml")
         .schema("n int")
@@ -643,22 +641,21 @@ def test_registered_datasource_streaming(spark, tmp_path):
         .load()
     )
     assert df.isStreaming
-    q = (
-        df.writeStream.format("memory")
-        .queryName("t_dsstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    vals = sorted(r["n"] for r in spark.sql("SELECT * FROM t_dsstream").collect())
-    assert vals == [0, 1, 10, 11]
+    with pytest.raises(StreamingQueryException, match="PYTHON_DATA_SOURCE_ERROR"):
+        q = (
+            df.writeStream.format("memory")
+            .queryName("t_dsstream")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
 
 
 def test_xspxml_stream_writer_partition_by(spark, tmp_path):
     """partitionBy flows through the streaming sink's commit protocol:
     each micro-batch's files land under key=value dirs atomically."""
     from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+    from xmlstreamprocessor_spark.streaming import stream_xml
 
     register_xml_source(spark)
     src = tmp_path / "src"
@@ -668,12 +665,9 @@ def test_xspxml_stream_writer_partition_by(spark, tmp_path):
         "<rec><n>3</n><k>a</k></rec></docs>"
     )
     out = tmp_path / "out"
+    spec = X.struct("rec", {"n": X.int_("n"), "k": X.string("k")})
     q = (
-        spark.readStream.format("xspxml")
-        .schema("n int, k string")
-        .option("rowTag", "rec")
-        .option("path", str(src))
-        .load()
+        stream_xml(spark, str(src), "rec", spec)
         .writeStream.format("xspxml")
         .option("rowTag", "rec")
         .option("path", str(out))
@@ -1098,10 +1092,10 @@ def test_udtf_struct_inner_with_container_attrs_and_defaults(spark):
     ]
 
 
-def test_udtf_on_error_modes(spark):
-    """on_error='skip' drops malformed documents (DROPMALFORMED analogue)
-    while clean documents in the same batch still emit; the default
-    on_error='fail' propagates the parse error (FAILFAST)."""
+def test_udtf_modes(spark):
+    """mode='DROPMALFORMED' drops malformed documents while clean documents
+    in the same batch still emit; the default mode='FAILFAST' propagates
+    the parse error; PERMISSIVE and unknown modes are refused."""
     import pytest as _pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PythonException
@@ -1118,7 +1112,7 @@ def test_udtf_on_error_modes(spark):
         "t_udtf_err_docs"
     )
     register_xml_array_udtf(
-        spark, "t_udtf_skip", "items", X.ndecimal("q"), on_error="skip"
+        spark, "t_udtf_skip", "items", X.ndecimal("q"), mode="DROPMALFORMED"
     )
     got = [
         (r["id"], float(r["value"]))
@@ -1130,7 +1124,7 @@ def test_udtf_on_error_modes(spark):
     assert got == [(1, 1.5), (3, 3.5)]
 
     register_xml_array_udtf(
-        spark, "t_udtf_fail", "items", X.ndecimal("q"), on_error="fail"
+        spark, "t_udtf_fail", "items", X.ndecimal("q"), mode="FAILFAST"
     )
     with _pytest.raises((PythonException, Py4JJavaError)):
         spark.sql(
@@ -1138,9 +1132,13 @@ def test_udtf_on_error_modes(spark):
             "LATERAL t_udtf_fail(d.doc) s"
         ).collect()
 
-    with _pytest.raises(ValueError, match="on_error"):
+    with _pytest.raises(ValueError, match="unknown mode"):
         register_xml_array_udtf(
-            spark, "t_udtf_bad", "items", X.ndecimal("q"), on_error="nope"
+            spark, "t_udtf_bad", "items", X.ndecimal("q"), mode="nope"
+        )
+    with _pytest.raises(ValueError, match="extract_xml"):
+        register_xml_array_udtf(
+            spark, "t_udtf_perm", "items", X.ndecimal("q"), mode="PERMISSIVE"
         )
 
 
@@ -1179,8 +1177,8 @@ def test_udtf_struct_entry_point_matches_kernel(spark):
         (2, "b", 0, "y"),
     ]
 
-    # on_error='skip' drops the malformed doc, clean rows survive
-    register_xml_struct_udtf(spark, "t_udtf_ord_skip", spec, on_error="skip")
+    # mode='DROPMALFORMED' drops the malformed doc, clean rows survive
+    register_xml_struct_udtf(spark, "t_udtf_ord_skip", spec, mode="DROPMALFORMED")
     bad = [(1, '<order id="a"><n>1</n></order>'), (2, "<order id='b'><n>2")]
     spark.createDataFrame(bad, "id int, doc string").createOrReplaceTempView(
         "t_udtf_ord_bad"
@@ -1413,9 +1411,9 @@ def test_jvm_hybrid_adversarial_prolog_fuzz(spark):
     _both_paths(spark, docs, root_spec)
 
 
-def test_udtf_struct_on_error_fail_and_skip(spark):
-    """The struct UDTF's on_error contract: fail propagates a malformed
-    document, skip drops it."""
+def test_udtf_struct_failfast_and_dropmalformed(spark):
+    """The struct UDTF's modes: FAILFAST propagates a malformed document,
+    DROPMALFORMED drops it, PERMISSIVE is refused."""
     import pytest as _pytest
 
     from xmlstreamprocessor_spark.plans import X
@@ -1436,13 +1434,15 @@ def test_udtf_struct_on_error_fail_and_skip(spark):
     bad.createOrReplaceTempView("u_parity_bad")
     with _pytest.raises(Exception):
         spark.sql("SELECT s.* FROM u_parity_bad d, LATERAL u_par_fail(d.doc) s").collect()
-    register_xml_struct_udtf(spark, "u_par_skip", spec, on_error="skip")
+    register_xml_struct_udtf(spark, "u_par_skip", spec, mode="DROPMALFORMED")
     assert (
         spark.sql(
             "SELECT s.* FROM u_parity_bad d, LATERAL u_par_skip(d.doc) s"
         ).count()
         == 0
     )
+    with _pytest.raises(ValueError, match="extract_xml"):
+        register_xml_struct_udtf(spark, "u_par_perm", spec, mode="PERMISSIVE")
 
 
 def test_xspxml_registered_queries(spark):

@@ -18,8 +18,8 @@ as Spark's file index lists them, and each task reads its file through
 ``read_xml``'s own core (``xml_batch._row_batches``), so the two return the
 same rows under every ``mode``; offset-less timestamps read as UTC.  Spark
 gets Arrow record batches of ``xml_batch.MAX_RECORDS_PER_BATCH`` records.
-``readStream.format("xspxml")`` plans one partition per newly listed file
-and reads it on the executors the same way.
+``xspxml`` has a batch reader and two writers (batch and streaming, below),
+but no stream reader: XML files stream through ``streaming.stream_xml``.
 
 A spec-aware variant rides the same source: ``option("specPickle", ...)``
 (produced by ``spec_option``) carries a pickled compiled spec so the full
@@ -39,7 +39,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
     WriterCommitMessage,
@@ -77,9 +76,6 @@ class XmlDataSource(DataSource):
 
     def reader(self, schema: StructType) -> "XmlSourceReader":
         return XmlSourceReader(schema, self.options)
-
-    def streamReader(self, schema: StructType) -> "XmlStreamReader":
-        return XmlStreamReader(schema, self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> "XmlBatchWriter":
         return XmlBatchWriter(schema, self.options, overwrite)
@@ -373,40 +369,6 @@ def register_xml_source(spark) -> None:
     # unless python-source pushdown is on (runtime-settable SQL conf)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(XmlDataSource)
-
-
-class XmlStreamReader(DataSourceStreamReader):
-    """Streaming half of the ``xspxml`` source: the offset is the set of
-    files already listed (path -> size), and each micro-batch plans one
-    partition per file that appeared since the last one — the same
-    exactly-once file-discovery contract as Spark's built-in file stream
-    source.  The driver only lists files; the partitions are read on the
-    executors by ``XmlSourceReader.read``, as in a batch scan."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self._reader = XmlSourceReader(schema, options)
-
-    def initialOffset(self) -> dict:
-        return {"files": {}}
-
-    def latestOffset(self) -> dict:
-        out = {}
-        for p in self._reader.partitions():
-            try:
-                out[p.path] = os.path.getsize(p.path)
-            except OSError:
-                continue
-        return {"files": out}
-
-    def partitions(self, start: dict, end: dict) -> list[_FilePartition]:
-        seen = start.get("files", {})
-        return [_FilePartition(p) for p in sorted(end["files"]) if p not in seen]
-
-    def read(self, partition: _FilePartition) -> Iterator:
-        return self._reader.read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
 
 
 # ---------------------------------------------------------------------------

@@ -38,6 +38,20 @@ from xmlstreamprocessor_spark.plans.spec import (
 )
 
 
+def _dropmalformed(mode: str) -> bool:
+    """Whether a UDTF under ``mode`` drops a malformed document (else it
+    fails the query).  A table function has no corrupt-record column, so
+    PERMISSIVE is refused and points at ``extract_xml``."""
+    if mode == "PERMISSIVE":
+        raise ValueError(
+            "a UDTF has no corrupt-record column, so mode='PERMISSIVE' is not "
+            "supported; use extract_xml(..., mode='PERMISSIVE') for triage"
+        )
+    if mode not in ("FAILFAST", "DROPMALFORMED"):
+        raise ValueError(f"unknown mode {mode!r}")
+    return mode == "DROPMALFORMED"
+
+
 def _row_schema(inner: Spec) -> tuple[T.StructType, list[str] | None]:
     """Output schema of the table function: a Struct inner contributes its
     fields as columns; a scalar inner becomes one ``value`` column."""
@@ -51,19 +65,18 @@ def xml_array_udtf(
     container_pattern: str,
     inner: Spec,
     strict_ns: bool = False,
-    on_error: str = "fail",
+    mode: str = "FAILFAST",
 ):
     """Build (but do not register) the UDTF class for one array spec.
     Returns the callable UDTF; use :func:`register_xml_array_udtf` to make
     it visible to SQL.
 
-    ``on_error``: ``"fail"`` (default) propagates malformed-document /
-    typed-cast errors and fails the job — the reference's FAILFAST
-    contract (wrapped ApplicationException, Parser.cs:146-149);
-    ``"skip"`` emits no rows for a document whose parse raises — the
-    table-function analogue of DROPMALFORMED (``extract_xml`` keeps the
-    richer PERMISSIVE triage mode; a UDTF has no corrupt-record column
-    to fill, so skip is the honest lossy option).
+    ``mode``: ``"FAILFAST"`` (default) propagates malformed-document /
+    typed-cast errors and fails the job — the reference's contract
+    (wrapped ApplicationException, Parser.cs:146-149); ``"DROPMALFORMED"``
+    emits no rows for a document whose parse raises.  ``"PERMISSIVE"``
+    raises ``ValueError``: a UDTF has no corrupt-record column to fill, so
+    triage goes through ``extract_xml``.
 
     Evaluation is always pickled rows (``useArrow=False``): Spark 4's
     Arrow-optimized UDTF evaluation measured 5-12x SLOWER for these
@@ -71,13 +84,11 @@ def xml_array_udtf(
     at sf0.1; 41.5s vs 3.4s at sf1) — per-row yield of small tuples
     defeats the batched transfer, each Arrow batch is built from Python
     objects anyway."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"unknown on_error mode {on_error!r}")
+    drop = _dropmalformed(mode)
     compiled: CompiledArraySpec = compile_array_spec(
         container_pattern, inner, strict_ns=strict_ns
     )
     schema, field_names = _row_schema(inner)
-    skip = on_error == "skip"
 
     class XmlArrayUdtf:
         def eval(self, xml: str):  # noqa: D102 — UDTF contract
@@ -86,7 +97,7 @@ def xml_array_udtf(
             try:
                 out = compiled.extract_string(xml)
             except Exception:
-                if skip:
+                if drop:
                     return
                 raise
             if out is None:  # root element does not match the container
@@ -104,24 +115,22 @@ def xml_array_udtf(
 def xml_struct_udtf(
     root: Struct,
     strict_ns: bool = False,
-    on_error: str = "fail",
+    mode: str = "FAILFAST",
 ):
     """The ``ParserTool.CreateParser<T>`` twin (Parser.cs:335-339) as a SQL
     table function: ONE typed record per document, its struct fields spread
     as output columns.  Completes the SQL surface next to
     :func:`xml_array_udtf` so both reference entry points have a LATERAL
-    face.  A non-matching root (wildcard miss) or a skipped malformed
+    face.  A non-matching root (wildcard miss) or a dropped malformed
     document emits zero rows — table-function semantics make "no record"
     representable without a null-struck row.
 
-    ``on_error`` follows the array UDTF: ``"fail"`` is the reference's
-    FAILFAST contract, ``"skip"`` drops the document's record.
+    ``mode`` follows the array UDTF: ``"FAILFAST"`` is the reference's
+    contract, ``"DROPMALFORMED"`` drops the document's record.
     Evaluation is pickled rows, as in :func:`xml_array_udtf`."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"unknown on_error mode {on_error!r}")
+    drop = _dropmalformed(mode)
     compiled: CompiledSpec = compile_spec(root, strict_ns=strict_ns)
     schema = compiled.schema
-    skip = on_error == "skip"
 
     class XmlStructUdtf:
         def eval(self, xml: str):  # noqa: D102 — UDTF contract
@@ -130,7 +139,7 @@ def xml_struct_udtf(
             try:
                 row = compiled.extract_row(ET.fromstring(xml))
             except Exception:
-                if skip:
+                if drop:
                     return
                 raise
             if row is None:  # root element does not match the pattern
@@ -145,11 +154,11 @@ def register_xml_struct_udtf(
     name: str,
     root: Struct,
     strict_ns: bool = False,
-    on_error: str = "fail",
+    mode: str = "FAILFAST",
 ):
     """Register the struct-extraction table function under ``name`` for SQL
     use (``FROM t, LATERAL name(t.doc)``)."""
-    fn = xml_struct_udtf(root, strict_ns=strict_ns, on_error=on_error)
+    fn = xml_struct_udtf(root, strict_ns=strict_ns, mode=mode)
     spark.udtf.register(name, fn)
     return fn
 
@@ -160,13 +169,11 @@ def register_xml_array_udtf(
     container_pattern: str,
     inner: Spec,
     strict_ns: bool = False,
-    on_error: str = "fail",
+    mode: str = "FAILFAST",
 ):
     """Register the array-extraction table function under ``name`` for SQL
     use (``FROM t, LATERAL name(t.doc)``).  Returns the UDTF so Python
     callers can also invoke it directly."""
-    fn = xml_array_udtf(
-        container_pattern, inner, strict_ns=strict_ns, on_error=on_error
-    )
+    fn = xml_array_udtf(container_pattern, inner, strict_ns=strict_ns, mode=mode)
     spark.udtf.register(name, fn)
     return fn

@@ -367,15 +367,15 @@ def _row_batches(
         yield emit(rows)
 
 
-def _file_schema(compiled: CompiledSpec, mode: str, corrupt_column: str):
-    """``read_xml``'s output schema: under PERMISSIVE the spec's fields,
-    widened to nullable (a triage row is null in each), then
-    ``corrupt_column``; otherwise the spec's schema."""
+def _file_schema(compiled: CompiledSpec, mode: str):
+    """The file surfaces' output schema: under PERMISSIVE the spec's
+    fields, widened to nullable (a triage row is null in each), then
+    ``_corrupt_file``; otherwise the spec's schema."""
     if mode != "PERMISSIVE":
         return compiled.schema
     return T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in compiled.schema.fields]
-        + [T.StructField(corrupt_column, T.StringType(), True)]
+        + [T.StructField("_corrupt_file", T.StringType(), True)]
     )
 
 
@@ -384,12 +384,11 @@ def _file_frames(
     compiled: CompiledSpec,
     batch_rows: int,
     mode: str = "FAILFAST",
-    corrupt_column: str = "_corrupt_file",
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """The ``mapInPandas`` function shared by ``read_xml`` and
     ``stream_xml``: (path, content) file batches in, one frame per
     ``_row_batches`` batch out, the triage column appended last."""
-    emit = functools.partial(_frame, _file_schema(compiled, mode, corrupt_column))
+    emit = functools.partial(_frame, _file_schema(compiled, mode))
     corrupt_at = len(compiled.names)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -403,6 +402,18 @@ def _file_frames(
         )
 
     return run
+
+
+def _read_files(files_df: DataFrame, row_tag: str, spec, mode: str) -> DataFrame:
+    """``read_xml`` and ``stream_xml`` past their ``binaryFile`` frame:
+    (path, content) rows in, one row per ``row_tag`` record out under
+    ``mode``, in frames of Spark's Arrow batch size."""
+    if mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
+        raise ValueError(f"unknown mode {mode!r}")
+    compiled = _ensure_compiled(spec)
+    batch_rows = _arrow_batch_rows(files_df.sparkSession)
+    run = _file_frames(row_tag, compiled, batch_rows, mode)
+    return files_df.mapInPandas(run, _file_schema(compiled, mode))
 
 
 def _jvm_safe(compiled: CompiledSpec) -> bool:
@@ -452,7 +463,6 @@ def extract_xml(
     spec,
     engine: str = "auto",
     mode: str = "FAILFAST",
-    corrupt_column: str = "_corrupt_record",
 ) -> DataFrame:
     """One XML document per input row -> one output row of extracted fields.
 
@@ -469,7 +479,7 @@ def extract_xml(
       cast aborts the job, matching the reference's throw-on-bad-input
       semantics (Parser.cs:119-208).
     * ``"PERMISSIVE"`` — a bad document yields a row of nulls with the raw
-      document preserved in ``corrupt_column``.  At 100 TB this is the mode
+      document preserved in ``_corrupt_record``.  At 100 TB this is the mode
       that keeps one rotten record in a billion from killing a
       1000-executor job; the corrupt rows stay queryable for triage.
     * ``"DROPMALFORMED"`` — bad documents are silently dropped.
@@ -506,7 +516,7 @@ def extract_xml(
     if mode == "PERMISSIVE":
         out_schema = T.StructType(
             out_schema.fields
-            + [T.StructField(corrupt_column, T.StringType(), True)]
+            + [T.StructField("_corrupt_record", T.StringType(), True)]
         )
 
     # batch only: fan small inputs out to every core before the Python
@@ -539,7 +549,7 @@ def extract_xml(
                         corrupt.append(None)
             out = _frame(schema, rows)
             if mode == "PERMISSIVE":
-                out[corrupt_column] = corrupt
+                out["_corrupt_record"] = corrupt
             yield out
 
     return df.mapInPandas(run, schema=out_schema)
@@ -551,7 +561,6 @@ def read_xml(
     row_tag: str,
     spec,
     mode: str = "FAILFAST",
-    corrupt_column: str = "_corrupt_file",
 ) -> DataFrame:
     """Read XML files under ``path``, emitting one row per ``row_tag``
     element.  A file is never split: ``binaryFile`` packs whole files into
@@ -563,17 +572,12 @@ def read_xml(
     reference's semantics), ``PERMISSIVE`` (every well-formed record is
     kept, before and after a bad one — the reader resyncs at the next
     row-tag start — and each malformed record becomes one null row whose
-    ``corrupt_column`` holds the file's path for triage), or
-    ``DROPMALFORMED`` (the same records, malformed ones dropped).  The
-    ``xspxml`` source reads files through the same loop, so both return
-    the same rows."""
-    if mode not in ("FAILFAST", "PERMISSIVE", "DROPMALFORMED"):
-        raise ValueError(f"unknown mode {mode!r}")
-    compiled = _ensure_compiled(spec)
+    ``_corrupt_file`` column holds the file's path for triage), or
+    ``DROPMALFORMED`` (the same records, malformed ones dropped).
+    ``stream_xml`` and the ``xspxml`` source read files through the same
+    loop, so all three return the same rows."""
     files_df = spark.read.format("binaryFile").load(path).select("path", "content")
-    batch_rows = _arrow_batch_rows(spark)
-    run = _file_frames(row_tag, compiled, batch_rows, mode, corrupt_column)
-    return files_df.mapInPandas(run, _file_schema(compiled, mode, corrupt_column))
+    return _read_files(files_df, row_tag, spec, mode)
 
 
 # ---------------------------------------------------------------------------

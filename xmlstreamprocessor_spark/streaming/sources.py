@@ -12,11 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from xmlstreamprocessor_spark.plans.spec import CompiledSpec, Struct
-from xmlstreamprocessor_spark.sources.xml_batch import (
-    _arrow_batch_rows,
-    _ensure_compiled,
-    _file_frames,
-)
+from xmlstreamprocessor_spark.sources.xml_batch import _read_files
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,25 +62,33 @@ def stream_xml(
     row_tag: str,
     spec: Struct | CompiledSpec,
     max_files_per_trigger: int | None = None,
+    mode: str = "FAILFAST",
 ) -> DataFrame:
     """Streaming XML extraction: watch ``path`` for files, emit one row per
-    ``row_tag`` element using the compiled extraction spec.
+    ``row_tag`` element using the compiled extraction spec.  This is the
+    only way to stream XML files; the ``xspxml`` source reads in batch
+    only.
 
     Files arrive through the streaming ``binaryFile`` source as raw bytes,
     so the parser honours each file's declared encoding, and are shredded
-    by the same partition function as batch ``read_xml`` (FAILFAST, output
-    frames bounded by Spark's Arrow batch size).  Downstream ops
-    (watermarks, windows, joins) are ordinary Structured Streaming.
-    ``max_files_per_trigger`` bounds each micro-batch (and makes
-    multi-batch replay deterministic in tests — files are picked up in
-    modification-time order)."""
-    compiled = _ensure_compiled(spec)
+    by the same partition function as batch ``read_xml`` (output frames
+    bounded by Spark's Arrow batch size), so a drain returns ``read_xml``'s
+    rows under every ``mode``:
+
+    * ``"FAILFAST"`` (default) — a malformed file fails the query.
+    * ``"PERMISSIVE"`` — every well-formed record is kept, before and after
+      a bad one, and each malformed record becomes one row of nulls whose
+      ``_corrupt_file`` column (added last) holds the file's path.
+    * ``"DROPMALFORMED"`` — the same records, malformed ones dropped.
+
+    Downstream ops (watermarks, windows, joins) are ordinary Structured
+    Streaming.  ``max_files_per_trigger`` bounds each micro-batch (and
+    makes multi-batch replay deterministic in tests — files are picked up
+    in modification-time order)."""
     r = spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
     if max_files_per_trigger is not None:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = r.load(path).select("path", "content")
-    run = _file_frames(row_tag, compiled, _arrow_batch_rows(spark))
-    return raw.mapInPandas(run, schema=compiled.schema)
+    return _read_files(r.load(path).select("path", "content"), row_tag, spec, mode)
 
 
 # the Kafka source's fixed output schema (Spark structured-streaming docs);
